@@ -1159,11 +1159,11 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The ordering uses the RAW int64 lattice aa_s, not the decimal-
     # converted double (r9): aa_s ↦ adamic_adar is strictly monotone
     # (distinct lattice points differ by ≥1e-12 while the double ulp at
-    # the max possible magnitude, 435·1.45e12/1e12 ≈ 630, is ~7e-14), so
-    # (cn DESC, aa_s DESC, x, y) is the SAME total order — and the exact
-    # decimal division now runs on the ≤N surviving rows instead of every
-    # candidate (6.7M decimal casts+divides at sf0.1 dropped from the
-    # TakeOrdered path).
+    # the max possible magnitude, 435·1.45e12/1e12 ≈ 630, is 2^-43 ≈
+    # 1.14e-13), so (cn DESC, aa_s DESC, x, y) is the SAME total order —
+    # and the exact decimal division now runs on the ≤N surviving rows
+    # instead of every candidate (6.7M decimal casts+divides at sf0.1
+    # dropped from the TakeOrdered path).
     rank_w = Window.orderBy(
         F.desc("common_neighbors"),
         F.desc("aa_s"),

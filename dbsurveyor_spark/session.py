@@ -18,6 +18,23 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
 
+def physical_ram_mb() -> int:
+    """Physical memory of this host in MiB."""
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+
+
+def default_heap(ram_mb: int) -> tuple[str, str]:
+    """Default driver ``-Xmx`` and ``-Xms`` for a host with ``ram_mb`` MiB.
+
+    48g / 24g, capped at half / a quarter of RAM so that a small host can
+    still start (and pre-touch) the heap; hosts with at least 96 GB keep
+    the full defaults.
+    """
+    xmx = min(48 * 1024, ram_mb // 2)
+    xms = min(24 * 1024, ram_mb // 4)
+    return f"{xmx}m", f"{xms}m"
+
+
 def get_session(
     app_name: str = "dbsurveyor-spark",
     master: str | None = None,
@@ -29,14 +46,15 @@ def get_session(
     to ``local[$SPARK_GRAFT_CPUS]``.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEMORY", "48g")
+    default_xmx, default_xms = default_heap(physical_ram_mb())
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEMORY", default_xmx)
     # Pre-size and pre-touch a floor of the heap: with only -Xmx set, the
     # JVM starts tiny and the first allocation-heavy query pays dozens of
     # growth GCs (measured: a dedup first pass at 52 s that steady-states
     # at 3 s; with -Xms+AlwaysPreTouch the same first pass is ~10 s).
     # Harmless on a cluster — executors get the same flags via
     # spark.executor.extraJavaOptions in spark-submit conf instead.
-    driver_xms = os.environ.get("SPARK_GRAFT_DRIVER_XMS", "24g")
+    driver_xms = os.environ.get("SPARK_GRAFT_DRIVER_XMS", default_xms)
     # Diagnostics hook (GC logs, JIT logging, …) without editing code.
     extra_opts = os.environ.get("SPARK_GRAFT_EXTRA_JAVA_OPTS", "")
     builder = (

@@ -14,7 +14,9 @@ Scale notes:
 - `column_profile` is one single-pass aggregate over the table (all per-column
   stats in one job, map-side combinable). Exact `count(distinct)` is kept
   because the correctness oracle needs exact values; the scale path is
-  `approx_count_distinct` (see `column_profile_approx`).
+  the HLL sketch `functions.aggregates.approx_distinct` (see
+  `column_profile_approx`), which replaced `approx_count_distinct` because
+  its one-buffer sketch costs far less per column than HyperLogLog++.
 - key inference aggregates shuffle only on the candidate key columns.
 """
 
@@ -28,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import TABLES, load_table
-from ..functions.aggregates import DECIMAL_T
+from ..functions.aggregates import DECIMAL_T, approx_distinct
 
 # (table, column, kind) — kind drives which min/max representation is used.
 _NUMERIC = "num"
@@ -128,8 +130,8 @@ def survey_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose independent stages the DAG scheduler does overlap — still ran
     ~40% slower at sf0.1 than pool submission, which keeps every executor
     slot fed across the branches' uneven shuffle tails. Exact distinct is
-    inherently shuffle-heavy — `column_profile_approx` (HLL, one pass, no
-    distinct expansion) is the interactive scale path.
+    inherently shuffle-heavy — `column_profile_approx` (HLL sketch, one
+    pass, no distinct expansion) is the interactive scale path.
     """
     df = load_table(spark, sf_dir, PROFILE_TABLE)
 
@@ -182,15 +184,17 @@ def survey_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 def column_profile_approx(
     spark: SparkSession, sf_dir: str, table: str, rsd: float = 0.02
 ) -> DataFrame:
-    """Scale-path profile: approx_count_distinct (HLL) instead of exact
+    """Scale-path profile: `approx_distinct` (HLL sketch) instead of exact
     distinct — one pass, no distinct-expand, for interactive 100 TB profiling.
+    The sketch replaced `approx_count_distinct`: one binary buffer per column
+    instead of HyperLogLog++'s 410 long buffer columns at rsd 0.02.
     Not oracle-checked (approx by construction)."""
     df = load_table(spark, sf_dir, table)
     aggs = [F.count(F.lit(1)).alias("__total")]
     for col in df.columns:
         aggs += [
             F.count(F.col(col)).alias(f"{col}__nonnull"),
-            F.approx_count_distinct(F.col(col), rsd).alias(f"{col}__distinct"),
+            approx_distinct(F.col(col), rsd).alias(f"{col}__distinct"),
         ]
     one = df.agg(*aggs)
     rows = [
@@ -499,7 +503,7 @@ WHERE CAST(i.n_common AS DOUBLE) / cs.n_distinct
 
 def survey_profile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry entry for the HLL scale path (rows-only driver check:
-    approx_count_distinct has no exact SQL oracle by construction)."""
+    an approximate distinct has no exact SQL oracle by construction)."""
     return column_profile_approx(spark, sf_dir, PROFILE_TABLE)
 
 

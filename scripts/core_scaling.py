@@ -29,8 +29,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "scripts"))
 
-from pyspark.sql import functions as F  # noqa: E402,F401
-
 import scale_smoke  # noqa: E402
 from dbsurveyor_spark import registry  # noqa: E402
 from dbsurveyor_spark.session import get_session  # noqa: E402
