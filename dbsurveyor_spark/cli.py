@@ -33,7 +33,6 @@ import argparse
 import json
 import os
 import sys
-from datetime import datetime, timezone
 from typing import Any
 
 SOURCE_TYPES = (
@@ -88,44 +87,15 @@ def _sqlite_path(url: str) -> str:
 # ------------------------------------------------------------------ collect
 
 
-def _sample_tables(
-    spark, sf_dir: str, limit: int, mode: str, throttle_ms: int | None = None
-) -> list[dict]:
-    """Reference-shaped TableSample list (models.rs:399): deterministic
-    head-by-first-column rows, redacted before entering the document."""
-    import time
+def __getattr__(name: str):
+    # `_sample_tables` is the lake sampler's name in this module (perfbench
+    # traces it as `cli.sample`). It is resolved on first use so that
+    # importing the CLI does not import pyspark.
+    if name == "_sample_tables":
+        from .survey.lakescan import sample_tables
 
-    from pyspark.sql import functions as F
-
-    from .catalog import TABLES, load_table
-    from .security import redact_rows
-
-    out = []
-    for i, tname in enumerate(TABLES):
-        if throttle_ms and i:
-            # reference --throttle (collect.rs:72): fixed delay between
-            # per-table operations for low-footprint collection
-            time.sleep(throttle_ms / 1000.0)
-        df = load_table(spark, sf_dir, tname)
-        order_col = df.columns[0]
-        rows = [
-            r.asDict(recursive=True)
-            for r in df.orderBy(F.desc(order_col)).limit(limit).collect()
-        ]
-        out.append(
-            {
-                "table_name": tname,
-                "schema_name": None,
-                "rows": redact_rows(rows, mode) if mode != "none" else rows,
-                "sample_size": len(rows),
-                "total_rows": None,
-                "sampling_strategy": {"MostRecent": {"limit": limit}},
-                "collected_at": datetime.now(timezone.utc).isoformat(),
-                "warnings": [],
-                "sample_status": "Complete",
-            }
-        )
-    return out
+        return sample_tables
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
 
 
 def cmd_collect(args: argparse.Namespace) -> int:
@@ -222,22 +192,8 @@ def cmd_collect(args: argparse.Namespace) -> int:
                 name=args.name or os.path.basename(args.source.rstrip("/")),
             )
             return _emit_collect(doc, args)
-        doc = collect_database_schema(
-            spark,
-            args.source,
-            name=args.name or os.path.basename(args.source.rstrip("/")),
-            infer_keys=not args.no_infer_keys,
-        )
-        if args.sample:
-            doc["samples"] = _sample_tables(
-                spark,
-                args.source,
-                args.sample,
-                args.redact_mode,
-                throttle_ms=args.throttle,
-            )
+        cfg = None
         if args.enable_quality:
-            from .survey.quality import collect_quality_metrics
             from .survey.qualityconfig import (
                 AnomalyConfig,
                 AnomalySensitivity,
@@ -258,9 +214,26 @@ def cmd_collect(args: argparse.Namespace) -> int:
             except ValueError as exc:
                 print(f"invalid quality config: {exc}", file=sys.stderr)
                 return 2
-            doc["quality_metrics"] = collect_quality_metrics(
-                spark, args.source, config=cfg
+        from .survey.lakescan import MissingTablesError
+
+        try:
+            doc = collect_database_schema(
+                spark,
+                args.source,
+                name=args.name or os.path.basename(args.source.rstrip("/")),
+                infer_keys=not args.no_infer_keys,
+                sample=args.sample or 0,
+                redact_mode=args.redact_mode,
+                quality=cfg,
+                throttle_ms=args.throttle,
             )
+        except MissingTablesError as exc:
+            # a lake holding only some of the catalog's tables
+            print(
+                f"partial catalog lake: missing {', '.join(exc.missing)}",
+                file=sys.stderr,
+            )
+            return 1
     elif args.source.startswith("sqlite:"):
         from .sources.sqlite import SqliteSource
 

@@ -16,8 +16,7 @@ Parity targets (shapes/behavior, re-built for a lake of parquet tables):
   compression rather than whole-file zstd framing).
 
 Everything driver-side here operates on *metadata* (schemas, inferred keys)
-— tiny. The only cluster work is the inference queries themselves, which are
-the already-scale-designed survey queries from `profile.py`.
+— tiny. The only cluster work is the one-scan survey of `lakescan.py`.
 """
 
 from __future__ import annotations
@@ -30,9 +29,10 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from ..catalog import TABLES, load_table
+from ..catalog import TABLES
 from ..security import detect_sensitive_columns
-from . import profile
+from .lakescan import survey_lake
+from .qualityconfig import QualityConfig
 
 FORMAT_VERSION = "1.0"
 COLLECTOR = "dbsurveyor-spark"
@@ -72,44 +72,46 @@ def collect_database_schema(
     name: str = "testdata",
     infer_keys: bool = True,
     warn_sensitive: bool = True,
+    *,
+    sample: int = 0,
+    redact_mode: str = "balanced",
+    quality: QualityConfig | None = None,
+    throttle_ms: int | None = None,
 ) -> dict[str, Any]:
     """Build the portable schema document for every catalog table.
 
-    Row counts come from `survey_schema_overview` (parquet metadata counts);
-    PK/FK facts from the inference queries when `infer_keys` (three small
-    aggregate jobs total — metadata-scale, not data-scale). Inferred keys
-    also materialize as index/constraint entries (models.rs:133 Index,
-    models.rs:156 Constraint shapes): a lake table has no physical b-tree,
-    but the inferred unique key IS the logical index a reader of the
-    document needs.
+    The whole document comes from ONE scan of the lake
+    (`lakescan.survey_lake`): each table is loaded once, one packed
+    aggregate gives every row count (and quality pass 1), one value
+    shuffle tests every PK/FK candidate when `infer_keys`, one more
+    aggregate counts quality pass 2's outliers, and `sample` > 0 fills
+    `samples` with redacted heads — about 55 Spark jobs for the ten
+    tables, however many facts the document records. Inferred keys also materialize as
+    index/constraint entries (models.rs:133 Index, models.rs:156
+    Constraint shapes): a lake table has no physical b-tree, but the
+    inferred unique key IS the logical index a reader of the document
+    needs. Raises `lakescan.MissingTablesError` before any Spark work when
+    a catalog table is absent.
     """
     import time
 
     t_start = time.monotonic()
-    overview = {
-        r["table_name"]: r
-        for r in profile.survey_schema_overview(spark, sf_dir).collect()
-    }
-    pk_by_table: dict[str, list[str]] = {}
-    fks_by_table: dict[str, list[dict[str, Any]]] = {}
-    if infer_keys:
-        for r in profile.survey_pk_inference(spark, sf_dir).collect():
-            if r["is_candidate_key"]:
-                pk_by_table.setdefault(r["table_name"], []).append(r["column_name"])
-        for r in profile.survey_fk_inference(spark, sf_dir).collect():
-            if r["is_foreign_key"]:
-                fks_by_table.setdefault(r["child_table"], []).append(
-                    {
-                        "name": f"fk_{r['child_table']}_{r['child_column']}",
-                        "columns": [r["child_column"]],
-                        "referenced_table": r["parent_table"],
-                        "referenced_columns": [r["parent_column"]],
-                    }
-                )
+    scan = survey_lake(
+        spark,
+        sf_dir,
+        TABLES,
+        infer_keys=infer_keys,
+        sample=sample,
+        redact_mode=redact_mode,
+        quality=quality,
+        throttle_ms=throttle_ms,
+    )
+    pk_by_table = scan.primary_keys
+    fks_by_table = scan.foreign_keys
 
     tables = []
     for tname in TABLES:
-        schema = load_table(spark, sf_dir, tname).schema
+        schema = scan.frames[tname].schema
         pk_cols = pk_by_table.get(tname, [])
         columns = [
             {
@@ -177,7 +179,7 @@ def collect_database_schema(
                 "indexes": indexes,
                 "constraints": constraints,
                 "comment": None,
-                "row_count": int(overview[tname]["row_count"]) if tname in overview else None,
+                "row_count": scan.row_counts[tname],
             }
         )
 
@@ -202,8 +204,8 @@ def collect_database_schema(
         "functions": [],
         "triggers": [],
         "custom_types": [],
-        "samples": None,
-        "quality_metrics": None,
+        "samples": scan.samples,
+        "quality_metrics": scan.quality_metrics,
         "collection_metadata": {
             "collector_version": COLLECTOR,
             "collected_at": datetime.now(timezone.utc).isoformat(),
@@ -287,7 +289,11 @@ def collect_multi_database_schema(
         d0 = time.monotonic()
         try:
             doc = collect_database_schema(
-                spark, sf_dir, name=db_name, infer_keys=infer_keys
+                spark,
+                sf_dir,
+                name=db_name,
+                infer_keys=infer_keys,
+                throttle_ms=throttle_ms,
             )
             results.append(
                 {

@@ -17,17 +17,21 @@ Scale notes:
   the HLL sketch `functions.aggregates.approx_distinct` (see
   `column_profile_approx`), which replaced `approx_count_distinct` because
   its one-buffer sketch costs far less per column than HyperLogLog++.
-- key inference aggregates shuffle only on the candidate key columns.
+- key inference (`key_inference`) is one value shuffle over the candidate
+  key columns for every PK and FK test at once.
 """
 
 from __future__ import annotations
 
 import os
+import time
 from concurrent.futures import ThreadPoolExecutor
 from functools import reduce
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..catalog import TABLES, load_table
 from ..functions.aggregates import DECIMAL_T, approx_distinct
@@ -107,6 +111,29 @@ def _profile_pool_width(n_branches: int) -> int:
     return max(2, min(n_branches, int(idle // 4) + 1))
 
 
+def pool_map(
+    spark: SparkSession,
+    fn: Callable,
+    items: list,
+    throttle_ms: int | None = None,
+) -> list:
+    """``[fn(x) for x in items]`` from a driver pool of `_profile_pool_width`
+    threads. Spark job groups are thread-local, so every target is wrapped
+    to inherit the caller's local properties (job group, description);
+    a plain pool thread would submit its jobs with no group at all. With
+    ``throttle_ms`` the calls run one at a time, ``throttle_ms`` apart."""
+    if throttle_ms:
+        out = []
+        for i, x in enumerate(items):
+            if i:
+                time.sleep(throttle_ms / 1000.0)
+            out.append(fn(x))
+        return out
+    target = inheritable_thread_target(spark)(fn)
+    with ThreadPoolExecutor(max_workers=_profile_pool_width(len(items))) as pool:
+        return list(pool.map(target, items))
+
+
 def survey_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-column stats of lineitem: null count, exact distinct count,
     min/max (numeric as double, strings as varchar, timestamps as epoch
@@ -170,10 +197,7 @@ def survey_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             r["max_str"] if not is_num else None,
         )
 
-    with ThreadPoolExecutor(
-        max_workers=_profile_pool_width(len(PROFILE_COLUMNS))
-    ) as pool:
-        rows = list(pool.map(_branch, PROFILE_COLUMNS))
+    rows = pool_map(spark, _branch, PROFILE_COLUMNS)
     return spark.createDataFrame(
         rows,
         "column_name string, null_count bigint, distinct_count bigint, "
@@ -252,26 +276,9 @@ PK_CANDIDATES = [
 
 
 def survey_pk_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
-    frames = []
-    for table, col in PK_CANDIDATES:
-        df = load_table(spark, sf_dir, table)
-        frames.append(
-            df.agg(
-                F.lit(table).alias("table_name"),
-                F.lit(col).alias("column_name"),
-                F.count(F.lit(1)).alias("total_rows"),
-                F.count_distinct(F.col(col)).alias("distinct_count"),
-            ).select(
-                "*",
-                (F.col("distinct_count").cast("double") / F.col("total_rows"))
-                .alias("uniqueness_ratio"),
-                (
-                    (F.col("distinct_count") == F.col("total_rows"))
-                    & (F.col("total_rows") > 0)
-                ).alias("is_candidate_key"),
-            )
-        )
-    return reduce(DataFrame.unionByName, frames)
+    """Candidate-key test per `PK_CANDIDATES` column (`key_inference`)."""
+    frames = {t: load_table(spark, sf_dir, t) for t in {t for t, _ in PK_CANDIDATES}}
+    return key_inference(spark, frames, PK_CANDIDATES, [])[0]
 
 
 def _pk_sql() -> str:
@@ -301,41 +308,116 @@ FK_CANDIDATES = [
 
 
 def survey_fk_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FK detection via key containment: |child∩parent| / |child distinct|.
+    """FK detection via key containment, |child∩parent| / |child distinct|,
+    per `FK_CANDIDATES` pair (`key_inference`)."""
+    names = {t for ct, _, pt, _ in FK_CANDIDATES for t in (ct, pt)}
+    frames = {t: load_table(spark, sf_dir, t) for t in names}
+    return key_inference(spark, frames, [], FK_CANDIDATES)[1]
 
-    Distinct child keys (small after distinct) semi-join the parent keys;
-    at scale the parent-distinct side of bounded dims is broadcast by AQE.
+
+def key_inference(
+    spark: SparkSession,
+    frames: dict[str, DataFrame],
+    pk_candidates: list[tuple[str, str]],
+    fk_candidates: list[tuple[str, str, str, str]],
+) -> tuple[DataFrame, DataFrame]:
+    """PK and FK tests for every candidate off ONE value shuffle.
+
+    Every candidate column (PK columns, FK children and parents) melts into
+    `(col, v)` rows with `v` cast to bigint; one `groupBy(col, v)` then
+    gives, per column, its row count (the null group included) and its
+    distinct non-null count — the exact PK test `distinct == rows > 0`.
+    The FK pairs ride the same plan: the child's distinct values join a
+    broadcast pairs table, left-semi join the parent's values, and count
+    per pair; both uses read the one exchange (the plan reuses it), the
+    same melt → distinct → join shape as `survey_fk_discovery`.
+
+    Returns `(pk, fk)` with `survey_pk_inference`'s and
+    `survey_fk_inference`'s columns. Ratios over zero rows or zero child
+    values are NULL, as SQL's division by zero is.
     """
-    frames = []
-    for ct, cc, pt, pc in FK_CANDIDATES:
-        # NULL child keys don't participate in FK semantics (and the oracle's
-        # COUNT(DISTINCT) excludes them) — drop them before the distinct.
-        child = (
-            load_table(spark, sf_dir, ct)
-            .select(F.col(cc).alias("k"))
-            .filter(F.col("k").isNotNull())
-            .distinct()
+    cols = list(
+        dict.fromkeys(
+            [(t, c) for t, c in pk_candidates]
+            + [(t, c) for ct, cc, pt, pc in fk_candidates for t, c in ((ct, cc), (pt, pc))]
         )
-        parent = load_table(spark, sf_dir, pt).select(F.col(pc).alias("k")).distinct()
-        matched = child.join(parent, "k", "left_semi")
-        stats = child.agg(F.count(F.lit(1)).alias("child_distinct")).crossJoin(
-            matched.agg(F.count(F.lit(1)).alias("matched_distinct"))
-        )
-        frames.append(
-            stats.select(
-                F.lit(ct).alias("child_table"),
-                F.lit(cc).alias("child_column"),
-                F.lit(pt).alias("parent_table"),
-                F.lit(pc).alias("parent_column"),
-                "child_distinct",
-                "matched_distinct",
-                (F.col("matched_distinct").cast("double") / F.col("child_distinct"))
-                .alias("containment"),
-                (F.col("matched_distinct") == F.col("child_distinct"))
-                .alias("is_foreign_key"),
+    )
+    vals = reduce(
+        DataFrame.unionByName,
+        [
+            frames[t].select(
+                F.lit(f"{t}.{c}").alias("col"), F.col(c).cast("bigint").alias("v")
             )
+            for t, c in cols
+        ],
+    )
+    groups = vals.groupBy("col", "v").agg(F.count(F.lit(1)).alias("n"))
+    per_col = groups.groupBy("col").agg(
+        F.sum("n").cast("bigint").alias("n_rows"),
+        F.count("v").alias("n_distinct"),
+    )
+
+    pk = (
+        spark.createDataFrame(
+            [(t, c, f"{t}.{c}") for t, c in pk_candidates],
+            "table_name string, column_name string, col string",
         )
-    return reduce(DataFrame.unionByName, frames)
+        .join(per_col, "col", "left")
+        .select(
+            "table_name",
+            "column_name",
+            F.coalesce("n_rows", F.lit(0)).alias("total_rows"),
+            F.coalesce("n_distinct", F.lit(0)).alias("distinct_count"),
+        )
+        .select(
+            "*",
+            F.try_divide(F.col("distinct_count").cast("double"), F.col("total_rows"))
+            .alias("uniqueness_ratio"),
+            (
+                (F.col("distinct_count") == F.col("total_rows"))
+                & (F.col("total_rows") > 0)
+            ).alias("is_candidate_key"),
+        )
+    )
+
+    pairs = spark.createDataFrame(
+        [(ct, cc, pt, pc, f"{ct}.{cc}", f"{pt}.{pc}") for ct, cc, pt, pc in fk_candidates],
+        "child_table string, child_column string, parent_table string, "
+        "parent_column string, child string, parent string",
+    )
+    distinct = groups.filter(F.col("v").isNotNull())
+    matched = (
+        distinct.select(F.col("col").alias("child"), "v")
+        .join(F.broadcast(pairs.select("child", "parent")), "child")
+        .join(
+            distinct.select(F.col("col").alias("parent"), "v"),
+            ["parent", "v"],
+            "left_semi",
+        )
+        .groupBy("child", "parent")
+        .agg(F.count(F.lit(1)).alias("n_matched"))
+    )
+    fk = (
+        pairs.join(per_col.withColumnRenamed("col", "child"), "child", "left")
+        .join(matched, ["child", "parent"], "left")
+        .select(
+            "child_table",
+            "child_column",
+            "parent_table",
+            "parent_column",
+            F.coalesce("n_distinct", F.lit(0)).alias("child_distinct"),
+            F.coalesce("n_matched", F.lit(0)).alias("matched_distinct"),
+        )
+        .select(
+            "*",
+            F.try_divide(
+                F.col("matched_distinct").cast("double"), F.col("child_distinct")
+            ).alias("containment"),
+            (F.col("matched_distinct") == F.col("child_distinct"))
+            .alias("is_foreign_key"),
+        )
+    )
+    return pk, fk
 
 
 def _fk_sql() -> str:

@@ -40,6 +40,7 @@ thresholds (z > 2.5, u < 1.0) agree bit-for-bit.
 
 from __future__ import annotations
 
+from datetime import datetime, timezone
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -746,6 +747,203 @@ def _quality_pass1(df: DataFrame, num_cols: list[str], rsd: float) -> DataFrame:
     return df.agg(*aggs)
 
 
+_NUMERIC_TYPES = {
+    "int", "bigint", "double", "float", "decimal", "smallint", "tinyint",
+}
+
+
+def numeric_columns(df: DataFrame) -> list[str]:
+    """The columns pass 1 takes moments of and pass 2 checks for outliers."""
+    return [
+        f.name
+        for f in df.schema.fields
+        # simpleString(): 'int'/'bigint'/'decimal(30,6)' — typeName()
+        # would say 'integer'/'long' and silently skip integer columns
+        if f.dataType.simpleString().split("(")[0] in _NUMERIC_TYPES
+    ]
+
+
+def _as_float(v):
+    # packed rows carry NaN/Infinity as JSON strings
+    return float(v) if isinstance(v, str) else v
+
+
+def outlier_checks(
+    r: dict, num_cols: list[str], config: QualityConfig
+) -> list[tuple[str, float, float]]:
+    """`(column, mean, std)` of each column pass 2 counts outliers in."""
+    checks = []
+    for c in num_cols if config.anomaly_detection.enabled else []:
+        mean, std = _as_float(r.get(f"{c}__mean")), _as_float(r.get(f"{c}__std"))
+        if mean is None or std is None or std == 0:
+            continue
+        checks.append((c, mean, std))
+    return checks
+
+
+def _quality_pass2(
+    df: DataFrame, checks: list[tuple[str, float, float]], z_threshold: float
+) -> DataFrame:
+    """Pass 2 as one 1-row aggregate: per checked column, the count of
+    rows with |x-μ| > z·σ under pass 1's moments."""
+    return df.agg(
+        *[
+            F.sum(
+                (
+                    F.abs(F.col(c).cast("double") - F.lit(m))
+                    > z_threshold * F.lit(sd)
+                ).cast("bigint")
+            ).alias(c)
+            for c, m, sd in checks
+        ]
+    )
+
+
+def disabled_table_metrics(tname: str, total: int) -> dict:
+    """analyzer.rs:68-76 — disabled analysis returns
+    TableQualityMetrics::new(...): analyzed_rows = the ACTUAL row count
+    (rows.len()), default-valued component metrics (models.rs:121,167,231
+    Default impls: score 1.0, empty lists), anomalies: None, quality_score
+    1.0, no violations. The document shape must be identical whether
+    analysis ran or was skipped."""
+    return {
+        "table_name": tname,
+        "schema_name": None,
+        "analyzed_rows": total,
+        "completeness": {"score": 1.0, "null_columns": []},
+        "consistency": {
+            "score": 1.0,
+            "type_inconsistencies": [],
+            "format_violations": [],
+        },
+        "uniqueness": {
+            "score": 1.0,
+            "duplicate_columns": [],
+            "duplicate_row_count": 0,
+        },
+        "anomalies": None,
+        "quality_score": 1.0,
+        "threshold_violations": [],
+        "analyzed_at": datetime.now(timezone.utc).isoformat(),
+    }
+
+
+def table_metrics(
+    tname: str,
+    cols: list[str],
+    r: dict,
+    checks: list[tuple[str, float, float]],
+    outlier_counts: dict,
+    config: QualityConfig,
+    rsd: float,
+    z_threshold: float,
+) -> dict:
+    """One TableQualityMetrics dict from pass 1's row ``r`` and pass 2's
+    ``outlier_counts`` (column → count, for the columns in ``checks``)."""
+    total = r.get("__total") or 0
+
+    null_cols = []
+    comp_scores = []
+    dup_cols = []
+    col_uniq_scores = []  # duplicate columns only (uniqueness.rs:61-64)
+    for c in cols:
+        nonnull = r[f"{c}__nonnull"]
+        nulls = total - nonnull
+        comp_scores.append((nonnull / total) if total else 1.0)
+        if nulls:
+            null_cols.append(
+                {
+                    "column_name": c,
+                    "null_count": nulls,
+                    "null_ratio": round(nulls / total, 6),
+                }
+            )
+        uniq = min(r[f"{c}__distinct"], nonnull)
+        # HLL reads within 3·rsd of exact-unique are noise, not dups
+        if nonnull - uniq < 3 * rsd * nonnull:
+            uniq = nonnull
+        # uniqueness.rs:33-44 stringifies NULL as a value
+        # ("null:__NULL__"), so repeated nulls are duplicates and the
+        # denominator is TOTAL rows (ColumnDuplicates::new divides
+        # unique_count by total, models.rs:204-209). distinct-with-null
+        # = nonnull distincts + one shared bucket for all nulls.
+        distinct_vals = min(uniq + (1 if nulls else 0), total)
+        dup_count = total - distinct_vals
+        if total and dup_count > 0:
+            col_uniq_scores.append(distinct_vals / total)
+            dup_cols.append(
+                {
+                    "column_name": c,
+                    "duplicate_count": dup_count,
+                    "unique_count": distinct_vals,
+                    "uniqueness": round(distinct_vals / total, 6),
+                }
+            )
+
+    outliers = []
+    for c, m, sd in checks:
+        n_out = outlier_counts.get(c) or 0
+        if n_out:
+            outliers.append(
+                {
+                    "column_name": c,
+                    "outlier_count": n_out,
+                    "z_score_threshold": z_threshold,
+                    "mean": m,
+                    "std_dev": sd,
+                }
+            )
+
+    comp = sum(comp_scores) / len(comp_scores) if comp_scores else 1.0
+    row_distinct = min(r["__row_distinct"], total)
+    if total - row_distinct < 3 * rsd * total:  # HLL noise floor
+        row_distinct = total
+    row_uniq = (row_distinct / total) if total else 1.0
+    consistency = 1.0  # parquet columns are strongly typed
+    # uniqueness.rs:61-76 — min(row uniqueness, avg uniqueness over
+    # columns WITH duplicates; 1.0 when no column has any)
+    avg_col_uniq = (
+        sum(col_uniq_scores) / len(col_uniq_scores) if col_uniq_scores else 1.0
+    )
+    uniq_score = min(row_uniq, avg_col_uniq)
+    score = config.quality_score(comp, consistency, uniq_score)
+    return {
+        "table_name": tname,
+        "schema_name": None,
+        "analyzed_rows": total,
+        "completeness": {
+            "score": round(comp, 6),
+            "null_columns": null_cols,
+        },
+        "consistency": {
+            "score": consistency,
+            "type_inconsistencies": [],
+            "format_violations": [],
+        },
+        "uniqueness": {
+            "score": round(uniq_score, 6),
+            "duplicate_columns": dup_cols,
+            "duplicate_row_count": total - row_distinct,
+        },
+        # analyzer.rs:84-91 with_optional_anomalies: None when
+        # detection is disabled — a skipped check must not look
+        # like a clean one.
+        "anomalies": (
+            {
+                "outlier_count": sum(a["outlier_count"] for a in outliers),
+                "outliers": outliers,
+            }
+            if config.anomaly_detection.enabled
+            else None
+        ),
+        "quality_score": round(score, 6),
+        "threshold_violations": config.threshold_violations(
+            comp, consistency, uniq_score
+        ),
+        "analyzed_at": datetime.now(timezone.utc).isoformat(),
+    }
+
+
 def collect_quality_metrics(
     spark: SparkSession,
     sf_dir: str,
@@ -765,199 +963,35 @@ def collect_quality_metrics(
     weights). An explicit ``z_threshold`` overrides the sensitivity-derived
     one (back-compat knob).
 
-    Two plain aggregate jobs per table, both Expand-free:
-    pass 1 sweeps counts + HLL distincts (per column AND over the full row
-    struct) + numeric mean/stddev; pass 2 counts |x-μ| > z·σ outliers using
-    pass 1's moments. Distinct ratios use `approx_distinct` — the
-    document records ratios, where HLL's ±2% is immaterial, and the exact
-    per-column suite (quality_* queries) stays available for oracle-checked
-    analysis. At 100 TB both passes are single linear scans with tiny
-    aggregation state, map-side combinable. `approx_distinct` replaced
+    Runs the quality half of the lake scan (`lakescan.survey_lake`): two
+    Expand-free aggregate jobs for ALL tables together, each a union of
+    one packed 1-row aggregate per table. Pass 1 sweeps counts + HLL
+    distincts (per column AND over the full row struct) + numeric
+    mean/stddev; pass 2 counts |x-μ| > z·σ outliers using pass 1's
+    moments. Distinct ratios use `approx_distinct` — the document records
+    ratios, where HLL's ±2% is immaterial, and the exact per-column suite
+    (quality_* queries) stays available for oracle-checked analysis. At
+    100 TB both passes are single linear scans with tiny aggregation
+    state, map-side combinable. `approx_distinct` replaced
     `approx_count_distinct`, whose HyperLogLog++ buffer (410 long columns
     per estimate, no codegen) made pass 1 cost seconds even on tiny tables.
     """
-    from datetime import datetime, timezone
-
     from ..catalog import TABLES
+    from .lakescan import survey_lake
 
     if config is None:
         config = QualityConfig()
     config.validate()
-    if z_threshold is None:
-        z_threshold = config.z_score_threshold
-    if not config.enabled:
-        # analyzer.rs:68-76 — disabled analysis returns
-        # TableQualityMetrics::new(...): analyzed_rows = the ACTUAL row
-        # count (rows.len()), default-valued component metrics
-        # (models.rs:121,167,231 Default impls: score 1.0, empty lists),
-        # anomalies: None, quality_score 1.0, no violations. The document
-        # shape must be identical whether analysis ran or was skipped.
-        return [
-            {
-                "table_name": t,
-                "schema_name": None,
-                "analyzed_rows": load_table(spark, sf_dir, t).count(),
-                "completeness": {"score": 1.0, "null_columns": []},
-                "consistency": {
-                    "score": 1.0,
-                    "type_inconsistencies": [],
-                    "format_violations": [],
-                },
-                "uniqueness": {
-                    "score": 1.0,
-                    "duplicate_columns": [],
-                    "duplicate_row_count": 0,
-                },
-                "anomalies": None,
-                "quality_score": 1.0,
-                "threshold_violations": [],
-                "analyzed_at": datetime.now(timezone.utc).isoformat(),
-            }
-            for t in (tables if tables is not None else list(TABLES))
-        ]
-
-    numeric_types = {
-        "int", "bigint", "double", "float", "decimal", "smallint", "tinyint",
-    }
-    out: list[dict] = []
-    for tname in tables if tables is not None else list(TABLES):
-        df = load_table(spark, sf_dir, tname)
-        cols = df.columns
-        num_cols = [
-            f.name
-            for f in df.schema.fields
-            # simpleString(): 'int'/'bigint'/'decimal(30,6)' — typeName()
-            # would say 'integer'/'long' and silently skip integer columns
-            if f.dataType.simpleString().split("(")[0] in numeric_types
-        ]
-        r = _quality_pass1(df, num_cols, rsd).first()
-        total = r["__total"] or 0
-
-        null_cols = []
-        comp_scores = []
-        dup_cols = []
-        col_uniq_scores = []  # duplicate columns only (uniqueness.rs:61-64)
-        for c in cols:
-            nonnull = r[f"{c}__nonnull"]
-            nulls = total - nonnull
-            comp_scores.append((nonnull / total) if total else 1.0)
-            if nulls:
-                null_cols.append(
-                    {
-                        "column_name": c,
-                        "null_count": nulls,
-                        "null_ratio": round(nulls / total, 6),
-                    }
-                )
-            uniq = min(r[f"{c}__distinct"], nonnull)
-            # HLL reads within 3·rsd of exact-unique are noise, not dups
-            if nonnull - uniq < 3 * rsd * nonnull:
-                uniq = nonnull
-            # uniqueness.rs:33-44 stringifies NULL as a value
-            # ("null:__NULL__"), so repeated nulls are duplicates and the
-            # denominator is TOTAL rows (ColumnDuplicates::new divides
-            # unique_count by total, models.rs:204-209). distinct-with-null
-            # = nonnull distincts + one shared bucket for all nulls.
-            distinct_vals = min(uniq + (1 if nulls else 0), total)
-            dup_count = total - distinct_vals
-            if total and dup_count > 0:
-                col_uniq_scores.append(distinct_vals / total)
-                dup_cols.append(
-                    {
-                        "column_name": c,
-                        "duplicate_count": dup_count,
-                        "unique_count": distinct_vals,
-                        "uniqueness": round(distinct_vals / total, 6),
-                    }
-                )
-
-        outliers = []
-        checks = []
-        for c in num_cols if config.anomaly_detection.enabled else []:
-            mean, std = r[f"{c}__mean"], r[f"{c}__std"]
-            if mean is None or std is None or std == 0:
-                continue
-            checks.append((c, mean, std))
-        if checks:
-            o = df.agg(
-                *[
-                    F.sum(
-                        (
-                            F.abs(F.col(c).cast("double") - F.lit(m))
-                            > z_threshold * F.lit(sd)
-                        ).cast("bigint")
-                    ).alias(c)
-                    for c, m, sd in checks
-                ]
-            ).first()
-            for c, m, sd in checks:
-                n_out = o[c] or 0
-                if n_out:
-                    outliers.append(
-                        {
-                            "column_name": c,
-                            "outlier_count": n_out,
-                            "z_score_threshold": z_threshold,
-                            "mean": m,
-                            "std_dev": sd,
-                        }
-                    )
-
-        comp = sum(comp_scores) / len(comp_scores) if comp_scores else 1.0
-        row_distinct = min(r["__row_distinct"], total)
-        if total - row_distinct < 3 * rsd * total:  # HLL noise floor
-            row_distinct = total
-        row_uniq = (row_distinct / total) if total else 1.0
-        consistency = 1.0  # parquet columns are strongly typed
-        # uniqueness.rs:61-76 — min(row uniqueness, avg uniqueness over
-        # columns WITH duplicates; 1.0 when no column has any)
-        avg_col_uniq = (
-            sum(col_uniq_scores) / len(col_uniq_scores)
-            if col_uniq_scores
-            else 1.0
-        )
-        uniq_score = min(row_uniq, avg_col_uniq)
-        score = config.quality_score(comp, consistency, uniq_score)
-        out.append(
-            {
-                "table_name": tname,
-                "schema_name": None,
-                "analyzed_rows": total,
-                "completeness": {
-                    "score": round(comp, 6),
-                    "null_columns": null_cols,
-                },
-                "consistency": {
-                    "score": consistency,
-                    "type_inconsistencies": [],
-                    "format_violations": [],
-                },
-                "uniqueness": {
-                    "score": round(uniq_score, 6),
-                    "duplicate_columns": dup_cols,
-                    "duplicate_row_count": total - row_distinct,
-                },
-                # analyzer.rs:84-91 with_optional_anomalies: None when
-                # detection is disabled — a skipped check must not look
-                # like a clean one.
-                "anomalies": (
-                    {
-                        "outlier_count": sum(
-                            a["outlier_count"] for a in outliers
-                        ),
-                        "outliers": outliers,
-                    }
-                    if config.anomaly_detection.enabled
-                    else None
-                ),
-                "quality_score": round(score, 6),
-                "threshold_violations": config.threshold_violations(
-                    comp, consistency, uniq_score
-                ),
-                "analyzed_at": datetime.now(timezone.utc).isoformat(),
-            }
-        )
-    return out
+    scan = survey_lake(
+        spark,
+        sf_dir,
+        list(tables) if tables is not None else list(TABLES),
+        infer_keys=False,
+        quality=config,
+        rsd=rsd,
+        z_threshold=z_threshold,
+    )
+    return scan.quality_metrics
 
 
 # ------------------------------------------------------ balance / reconcile
