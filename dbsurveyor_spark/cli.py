@@ -264,17 +264,14 @@ def cmd_collect(args: argparse.Namespace) -> int:
             print(f"bad docs source: {exc}", file=sys.stderr)
             return 2
         spark = _get_spark()
-        doc = src.survey(spark, name=args.name)
-        if args.sample:
+        doc = src.survey(spark, name=args.name, sample=args.sample or 0)
+        if doc["samples"]:
             from .security import redact_rows
 
-            doc["samples"] = []
-            for t in doc["tables"]:
-                s = src.sample_collection(spark, t["name"], args.sample)
+            for s in doc["samples"]:
                 s["rows"] = redact_rows(
                     [json.loads(r) for r in s["rows"]], mode=args.redact_mode
                 )
-                doc["samples"].append(s)
     elif args.source.split("://", 1)[0] in (
         "postgres", "postgresql", "mysql", "mariadb"
     ):

@@ -15,36 +15,54 @@ Random (`sampling.rs:137 sample_collection`).
 No live MongoDB exists in this container, so the lake shape is the one a
 100 TB pipeline actually has: directories of JSON-lines files, one
 collection per file (a mongoexport/DocumentDB-dump layout). Everything the
-reference does per-document in Rust is re-expressed as DataFrame plans:
+reference does per-document in Rust is re-expressed as DataFrame plans,
+and one kernel (`survey_collections`) surveys every collection at once:
 
-- **Schema inference is distributed**, not a driver-side sample walk. Each
-  line is parsed once into a Spark VARIANT (`try_parse_json`); nested
-  fields are discovered with ``max_depth`` chained `variant_explode`
-  lateral joins (level N's object values feed level N+1 — one logical
-  plan, no driver recursion), then a single groupBy(path, type) →
-  groupBy(path) rollup computes occurrence counts, type frequencies, and
-  the first-seen ordinal. State per field is O(1); the explode fan-out is
-  bounded by document size, so the whole inference is a linear scan at any
-  corpus size — the reference's 100-document sample loop can't see rare
-  fields; this sees every one.
+- **One frame.** The lake is a union of one `spark.read.text` per file,
+  each tagged with its collection name as a literal, so a filter on one
+  name prunes the plan to that file. Each line is parsed once into a Spark
+  VARIANT (`try_parse_json`); a line that does not parse is counted and
+  reported as a warning, not surveyed.
+- **One probe aggregate** per collection: document count, malformed-line
+  count and the nesting depth of the deepest document, read from each
+  document's `schema_of_variant` string. The depth is taken per document
+  and not from `schema_of_variant_agg`, because the merged schema turns a
+  path whose type differs between documents into `VARIANT` and so hides
+  any object below it.
+- **Schema inference is distributed**, not a driver-side sample walk.
+  Nested fields are discovered with as many chained `variant_explode`
+  lateral joins as the deepest collection nests (at most ``max_depth``;
+  level N's object values feed level N+1 — one logical plan, no driver
+  recursion), then a single groupBy(collection, path, type) →
+  groupBy(collection, path) rollup computes occurrence counts, type
+  frequencies, and the first-seen ordinal. State per field is O(1); the
+  explode fan-out is bounded by document size, so the whole inference is
+  a linear scan at any corpus size — the reference's 100-document sample
+  loop can't see rare fields; this sees every one. The ordering strategy
+  is read from the same rows (the root-level fields).
 - **Mongo Extended JSON v2 wrappers** (`{"$oid": ...}`, `{"$date": ...}`,
   `{"$numberLong": ...}`, `{"$binary": ...}`, `{"$numberDecimal": ...}`)
   are recognized as scalar BSON types (objectId/date/int64/binData/
   decimal), mirroring `type_mapping.rs:26` — they classify as scalars and
   are not recursed into.
-- **Sampling never global-sorts**: MostRecent is `orderBy(...desc).limit`
-  (Spark's TakeOrderedAndProject — per-partition top-N + driver merge) and
-  Random is the house deterministic md5-order sample, portable across
-  engines.
+- **Sampling never global-sorts**: the samples of every collection are one
+  union of per-collection `orderBy(...).limit(n)` frames, each planned as
+  its own TakeOrderedAndProject (per-partition top-N + driver merge).
+  MostRecent orders by the detected field descending; Random is the house
+  deterministic md5-order sample, portable across engines.
 """
 
 from __future__ import annotations
 
+import logging
 import os
+from functools import reduce
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+log = logging.getLogger(__name__)
 
 # sampling.rs:22 — field names that signal "order by this, descending" for
 # MostRecent sampling.
@@ -75,6 +93,13 @@ _EXT_JSON_TYPES = {
     "$binary": "binData",
     "$timestamp": "timestamp",
 }
+
+_COLL = "__collection"
+
+# A backquoted name in a `schema_of_variant` string; a backquote inside the
+# name is doubled. Names that need no quotes are plain identifiers, so every
+# `<` or `>` outside these is a type bracket.
+_QUOTED_NAME = r"`[^`]*(?:``[^`]*)*`"
 
 
 def _classify_variant(value) -> Any:
@@ -126,15 +151,86 @@ def type_name_to_unified(type_name: str) -> Any:
     }.get(type_name, {"Custom": {"type_name": type_name}})
 
 
-def infer_collection_schema(
-    docs: DataFrame,
-    collection_name: str,
-    max_depth: int = 8,
-) -> dict[str, Any]:
-    """Distributed schema inference over a `(doc_id, doc variant)` frame.
+# ------------------------------------------------------------------ kernel
 
-    Mirrors `schema_inference.rs:125-233` (SchemaInferrer::analyze_document
-    / finalize) field-for-field:
+
+def read_lines(spark: SparkSession, files: dict[str, str]) -> DataFrame:
+    """`(__collection, doc variant, raw string)` for every non-blank line of
+    ``files`` (collection name → path); a line that is not JSON keeps a
+    null ``doc``. One `spark.read.text` per file, tagged with a literal, so
+    a filter on ``__collection`` prunes the union to that file."""
+    frames = [
+        spark.read.text(path).select(F.lit(name).alias(_COLL), F.col("value"))
+        for name, path in files.items()
+    ]
+    return (
+        reduce(DataFrame.union, frames)
+        .filter(F.trim("value") != "")
+        .select(
+            _COLL,
+            F.try_parse_json(F.col("value")).alias("doc"),
+            F.col("value").alias("raw"),
+        )
+    )
+
+
+def _nesting_depth(brackets: Column, cap: int) -> Column:
+    """``min(cap, nesting depth)`` of a string of balanced ``<``/``>``.
+
+    Each pass of `replace(s, '<>', '')` removes every innermost pair, which
+    lowers the deepest point by exactly one, so the depth is the number of
+    passes before the string is empty.
+    """
+    depth = F.lit(0)
+    for _ in range(cap):
+        depth = depth + (F.length(brackets) > 0).cast("int")
+        brackets = F.replace(brackets, F.lit("<>"), F.lit(""))
+    return depth
+
+
+def probe_collections(
+    lines: DataFrame, max_depth: int
+) -> dict[str, tuple[int, int, int]]:
+    """collection → (documents, malformed lines, levels) in one aggregate.
+
+    ``levels`` is the object and array nesting depth of the deepest
+    document, capped at ``max_depth``: the explode levels the inference
+    needs. Arrays and Extended JSON wrappers are not descended, so they can
+    only over-count, which costs one empty level. A collection with no
+    non-blank line has no row.
+    """
+    brackets = F.regexp_replace(
+        F.regexp_replace(F.schema_of_variant("doc"), _QUOTED_NAME, ""),
+        "[^<>]",
+        "",
+    )
+    rows = (
+        lines.select(_COLL, "doc", brackets.alias("__brackets"))
+        .groupBy(_COLL)
+        .agg(
+            F.count("doc").alias("documents"),
+            F.count_if(F.col("doc").isNull()).alias("malformed"),
+            F.max(_nesting_depth(F.col("__brackets"), max_depth)).alias("levels"),
+        )
+        .collect()  # metadata-sized: one row per collection
+    )
+    return {
+        r[_COLL]: (r["documents"], r["malformed"], r["levels"] or 0) for r in rows
+    }
+
+
+def infer_collection_schemas(
+    docs: DataFrame,
+    documents: dict[str, int],
+    levels: int,
+) -> tuple[dict[str, dict[str, Any]], dict[str, list[str]]]:
+    """Distributed schema inference over a `(__collection, __doc_id, doc
+    variant)` frame, every collection at once.
+
+    Returns (collection → inferred schema, collection → root field names);
+    ``documents`` holds each collection's document count. Mirrors
+    `schema_inference.rs:125-233` (SchemaInferrer::analyze_document /
+    finalize) field-for-field:
 
     - nested objects contribute dot-notation paths (arrays are typed but
       not descended, matching `analyze_document_fields`'s "not arrays of
@@ -154,25 +250,35 @@ def infer_collection_schema(
       unordered by spec; the reference's insertion-order ordinal is an
       artifact of BSON preserving it). Deterministic either way.
 
-    One explode chain + two aggregation exchanges; no driver loops over
-    data. `max_depth` bounds the plan depth the way the reference's call
-    stack bounds its recursion.
+    The plan chains ``levels`` `variant_explode` lateral joins — the depth
+    `probe_collections` measured, capped at ``max_depth`` the way the
+    reference's call stack bounds its recursion — then two aggregation
+    exchanges; no driver loops over data. With ``levels`` 0 no job runs.
     """
+    schemas = {
+        name: {"collection_name": name, "documents_sampled": n, "fields": []}
+        for name, n in documents.items()
+    }
+    roots: dict[str, list[str]] = {name: [] for name in documents}
+    if levels == 0:
+        return schemas, roots
     spark = docs.sparkSession
     doc_id, path, value, pos = "__doc_id", "__path", "__value", "__pos"
     frontier = docs.select(
+        F.col(_COLL),
         F.col(doc_id),
         F.lit("").alias(path),
         F.col("doc").alias(value),
         F.lit("").alias(pos),
     )
-    levels: list[DataFrame] = []
-    for _ in range(max_depth):
+    fields: DataFrame | None = None
+    for depth in range(1, levels + 1):
         typed = frontier.withColumn("__type", _classify_variant(F.col(value)))
         exploded = typed.filter(F.col("__type") == "object").lateralJoin(
             spark.tvf.variant_explode(F.col(value).outer())
         )
         frontier = exploded.select(
+            F.col(_COLL),
             F.col(doc_id),
             F.when(F.col(path) == "", F.col("key"))
             .otherwise(F.concat_ws(".", path, "key"))
@@ -180,19 +286,23 @@ def infer_collection_schema(
             F.col("value").alias(value),
             F.concat(F.col(pos), F.lpad(F.col("pos"), 4, "0")).alias(pos),
         )
-        levels.append(
-            frontier.withColumn("__type", _classify_variant(F.col(value)))
+        level = frontier.select(
+            _COLL,
+            doc_id,
+            path,
+            pos,
+            _classify_variant(F.col(value)).alias("__type"),
+            F.lit(depth).alias("__depth"),
         )
-    all_fields = levels[0]
-    for lv in levels[1:]:
-        all_fields = all_fields.unionByName(lv)
+        fields = level if fields is None else fields.union(level)
 
-    per_type = all_fields.groupBy(path, "__type").agg(
+    per_type = fields.groupBy(_COLL, path, "__type").agg(
         F.count(F.lit(1)).alias("n"),
         F.min(F.struct(doc_id, pos)).alias("first_seen"),
+        F.min("__depth").alias("depth"),
     )
     stats = (
-        per_type.groupBy(path)
+        per_type.groupBy(_COLL, path)
         .agg(
             F.sum("n").alias("occurrences"),
             F.min("first_seen").alias("first_seen"),
@@ -205,29 +315,139 @@ def infer_collection_schema(
                     F.col("__type") != "null", F.struct(F.col("n"), F.col("__type"))
                 ),
             ).alias("primary_type"),
+            F.min("depth").alias("depth"),
         )
-        .orderBy("first_seen")
     )
-    rows = stats.collect()  # metadata-sized: one row per distinct field path
-    total_docs = docs.count()
-    fields = []
-    for i, r in enumerate(rows):
+    # metadata-sized: one row per distinct (collection, field path), put in
+    # discovery order here rather than by a Spark sort
+    for r in sorted(stats.collect(), key=lambda r: (r[_COLL], r["first_seen"])):
+        name = r[_COLL]
+        out = schemas[name]["fields"]
         primary = r["primary_type"] or "null"
-        fields.append(
+        out.append(
             {
                 "name": r[path],
                 "observed_types": list(r["observed_types"]),
                 "unified_type": type_name_to_unified(primary),
                 "occurrence_count": r["occurrences"],
-                "is_nullable": r["occurrences"] < total_docs
+                "is_nullable": r["occurrences"] < documents[name]
                 or "null" in r["observed_types"],
-                "ordinal_position": i + 1,
+                "ordinal_position": len(out) + 1,
             }
         )
+        if r["depth"] == 1:
+            roots[name].append(r[path])
+    return schemas, roots
+
+
+def _sample_order(strategy: Any) -> Column:
+    """Sort key of one collection's sample: the detected field's JSON
+    encoding descending (ISO-8601 `$date` wrappers and ObjectId hex both
+    sort correctly as strings), else the deterministic md5 order."""
+    if strategy == "Unordered":
+        return F.md5(F.col("raw"))
+    col = (
+        strategy["Timestamp"]["column"]
+        if "Timestamp" in strategy
+        else strategy["PrimaryKey"]["columns"][0]
+    )
+    return F.to_json(F.try_variant_get(F.col("doc"), f"$.{col}", "variant")).desc()
+
+
+def _sample_frame(lines: DataFrame, strategies: dict[str, Any], n: int) -> DataFrame:
+    """`(__collection, j)`: up to ``n`` JSON documents of each collection in
+    ``strategies`` (collection → ordering strategy), in sample order.
+
+    One `orderBy(...).limit(n)` per collection, unioned: each branch plans
+    as its own TakeOrderedAndProject (per-partition top-N + driver merge),
+    so nothing sorts the whole lake and one action takes every sample.
+    """
+    branches = [
+        lines.filter((F.col(_COLL) == name) & F.col("doc").isNotNull())
+        .orderBy(_sample_order(strategy))
+        .limit(n)
+        .select(_COLL, F.to_json("doc").alias("j"))
+        for name, strategy in strategies.items()
+    ]
+    return reduce(DataFrame.union, branches)
+
+
+def survey_collections(
+    spark: SparkSession,
+    files: dict[str, str],
+    max_depth: int = 8,
+    sample: int = 0,
+) -> list[dict[str, Any]]:
+    """Survey the collections in ``files`` (name → path) together.
+
+    One entry per collection, in ``files`` order: ``name``, ``documents``,
+    ``malformed`` (lines that are not JSON), ``schema`` (the inferred
+    schema) and ``sample`` (a TableSample-shaped dict, or None when
+    ``sample`` is 0). Three actions at most, whatever the number of
+    collections: the probe, the inference and, with ``sample``, the
+    samples.
+    """
+    if not files:  # spark.read.text([]) raises
+        return []
+    lines = read_lines(spark, files)
+    probe = probe_collections(lines, max_depth)
+    counts = {name: probe.get(name, (0, 0, 0)) for name in files}
+    documents = {name: c[0] for name, c in counts.items()}
+    docs = lines.filter(F.col("doc").isNotNull()).select(
+        _COLL, F.monotonically_increasing_id().alias("__doc_id"), "doc"
+    )
+    schemas, roots = infer_collection_schemas(
+        docs, documents, max(c[2] for c in counts.values())
+    )
+    strategies = {name: detect_ordering_strategy(roots[name]) for name in files}
+    rows: dict[str, list[str]] = {name: [] for name in files}
+    non_empty = {name: s for name, s in strategies.items() if documents[name]}
+    if sample > 0 and non_empty:
+        for r in _sample_frame(lines, non_empty, sample).collect():
+            rows[r[_COLL]].append(r["j"])
+    out = []
+    for name in files:
+        n, malformed, _ = counts[name]
+        out.append(
+            {
+                "name": name,
+                "documents": n,
+                "malformed": malformed,
+                "schema": schemas[name],
+                "sample": (
+                    _table_sample(name, strategies[name], rows[name], n, sample)
+                    if sample > 0
+                    else None
+                ),
+            }
+        )
+    return out
+
+
+def _table_sample(
+    name: str, strategy: Any, rows: list[str], total: int, sample_size: int
+) -> dict[str, Any]:
+    """`sampling.rs:137 sample_collection`'s TableSample shape."""
+    warnings = []
+    if len(rows) < sample_size:
+        warnings.append(
+            f"collection has only {len(rows)} documents, "
+            f"less than requested sample size of {sample_size}"
+        )
     return {
-        "collection_name": collection_name,
-        "documents_sampled": total_docs,
-        "fields": fields,
+        "table_name": name,
+        "schema_name": None,
+        "sample_size": len(rows),
+        "total_rows": total,
+        "sampling_strategy": (
+            {"Random": {"limit": sample_size}}
+            if strategy == "Unordered"
+            else {"MostRecent": {"limit": sample_size}}
+        ),
+        "ordering_strategy": strategy,
+        "rows": rows,
+        "status": "Success",
+        "warnings": warnings,
     }
 
 
@@ -270,7 +490,9 @@ def detect_ordering_strategy(root_fields: list[str]) -> dict[str, Any]:
 
 class DocumentLakeSource:
     """One directory of JSON-lines collections (`<name>.jsonl`), surveyed
-    like the reference surveys one MongoDB database."""
+    like the reference surveys one MongoDB database. Every method runs the
+    `survey_collections` kernel (or its first stage) on all collections or
+    on one."""
 
     def __init__(self, path: str):
         if not os.path.isdir(path):
@@ -288,12 +510,20 @@ class DocumentLakeSource:
                 out[stem] = full
         return out
 
+    def _one(self, name: str) -> dict[str, str]:
+        file = self.collection_files().get(name)
+        if file is None:
+            raise KeyError(f"no such collection: {name}")
+        return {name: file}
+
     def list_collections(self, spark: SparkSession) -> list[dict[str, Any]]:
         """`enumeration.rs:163 list_collections` — name, document count,
-        size, average document size."""
+        size, average document size; one probe aggregate for the lake."""
+        files = self.collection_files()
+        probe = probe_collections(read_lines(spark, files), 0) if files else {}
         out = []
-        for name, file in self.collection_files().items():
-            n = self.read_collection(spark, name).count()
+        for name, file in files.items():
+            n = probe.get(name, (0, 0, 0))[0]
             size = os.path.getsize(file)
             out.append(
                 {
@@ -311,104 +541,49 @@ class DocumentLakeSource:
     # -------------------------------------------------------------- reads
 
     def read_collection(self, spark: SparkSession, name: str) -> DataFrame:
-        """`(__doc_id, doc variant, raw string)` frame; bad JSON lines parse
-        to null variants and are dropped (the reference's cursor
-        deserialization failure analog, minus the hard error)."""
-        file = self.collection_files().get(name)
-        if file is None:
-            raise KeyError(f"no such collection: {name}")
-        lines = spark.read.text(file).filter(F.trim("value") != "")
+        """`(__doc_id, doc variant, raw string)` frame of one collection's
+        documents; lines that are not JSON are left out (the reference's
+        cursor deserialization failure analog, minus the hard error)."""
         return (
-            lines.select(
-                F.monotonically_increasing_id().alias("__doc_id"),
-                F.try_parse_json(F.col("value")).alias("doc"),
-                F.col("value").alias("raw"),
-            )
+            read_lines(spark, self._one(name))
             .filter(F.col("doc").isNotNull())
+            .select(F.monotonically_increasing_id().alias("__doc_id"), "doc", "raw")
         )
 
-    # ---------------------------------------------------------- inference
+    # ------------------------------------------------ one-collection views
 
     def infer_schema(
         self, spark: SparkSession, name: str, max_depth: int = 8
     ) -> dict[str, Any]:
-        return infer_collection_schema(
-            self.read_collection(spark, name).select("__doc_id", "doc"),
-            name,
-            max_depth=max_depth,
-        )
-
-    # ----------------------------------------------------------- sampling
+        (c,) = survey_collections(spark, self._one(name), max_depth=max_depth)
+        return c["schema"]
 
     def sample_collection(
         self, spark: SparkSession, name: str, sample_size: int = 100
     ) -> dict[str, Any]:
         """`sampling.rs:137 sample_collection` — TableSample-shaped dict.
 
-        MostRecent orders by the detected field's JSON encoding descending
-        (ISO-8601 `$date` wrappers and ObjectId hex both sort correctly as
-        strings) via `orderBy.limit` = TakeOrderedAndProject: per-partition
-        top-N, no global sort. Unordered collections fall back to the
-        deterministic md5-order random sample (portable, reproducible —
-        where the reference's `$sample` stage explicitly is not; it logs
-        that as a warning, we simply don't have the problem).
+        Unordered collections take the deterministic md5-order random
+        sample (portable, reproducible — where the reference's `$sample`
+        stage explicitly is not; it logs that as a warning, we simply
+        don't have the problem).
         """
-        df = self.read_collection(spark, name)
-        root_fields = [
-            r["key"]
-            for r in df.select("doc")
-            .lateralJoin(spark.tvf.variant_explode(F.col("doc").outer()))
-            .select("key")
-            .distinct()
-            .collect()
-        ]
-        strategy = detect_ordering_strategy(root_fields)
-        warnings: list[str] = []
-        if strategy == "Unordered":
-            order_expr = F.md5(F.col("raw"))
-            sampling = {"Random": {"limit": sample_size}}
-        else:
-            col = (
-                strategy["Timestamp"]["column"]
-                if "Timestamp" in strategy
-                else strategy["PrimaryKey"]["columns"][0]
-            )
-            order_expr = F.to_json(
-                F.try_variant_get(F.col("doc"), f"$.{col}", "variant")
-            ).desc()
-            sampling = {"MostRecent": {"limit": sample_size}}
-        rows = [
-            r["j"]
-            for r in df.orderBy(order_expr)
-            .limit(sample_size)
-            .select(F.to_json("doc").alias("j"))
-            .collect()
-        ]
-        total = df.count()
-        if len(rows) < sample_size:
-            warnings.append(
-                f"collection has only {len(rows)} documents, "
-                f"less than requested sample size of {sample_size}"
-            )
-        return {
-            "table_name": name,
-            "schema_name": None,
-            "sample_size": len(rows),
-            "total_rows": total,
-            "sampling_strategy": sampling,
-            "ordering_strategy": strategy,
-            "rows": rows,
-            "status": "Success",
-            "warnings": warnings,
-        }
+        (c,) = survey_collections(spark, self._one(name), sample=sample_size)
+        return c["sample"]
 
     # ------------------------------------------------------------- survey
 
     def survey(
-        self, spark: SparkSession, name: str | None = None, max_depth: int = 8
+        self,
+        spark: SparkSession,
+        name: str | None = None,
+        max_depth: int = 8,
+        sample: int = 0,
     ) -> dict[str, Any]:
         """Whole-lake schema document in the export shape (the analog of
-        `mod.rs:449`'s collect surface assembled into DatabaseSchema)."""
+        `mod.rs:449`'s collect surface assembled into DatabaseSchema).
+        With ``sample`` > 0, ``samples`` holds up to that many documents of
+        each collection as JSON strings, unredacted."""
         import time
         from datetime import datetime, timezone
 
@@ -416,17 +591,17 @@ class DocumentLakeSource:
         from ..survey.export import COLLECTOR, FORMAT_VERSION
 
         t_start = time.monotonic()
+        files = self.collection_files()
+        surveyed = survey_collections(spark, files, max_depth=max_depth, sample=sample)
         tables = []
-        total_size = 0
-        for cname, file in self.collection_files().items():
-            inferred = self.infer_schema(spark, cname, max_depth=max_depth)
-            total_size += os.path.getsize(file)
-            pk = any(f["name"] == "_id" for f in inferred["fields"])
+        malformed = []
+        for c in surveyed:
+            pk = any(f["name"] == "_id" for f in c["schema"]["fields"])
             tables.append(
                 {
-                    "name": cname,
+                    "name": c["name"],
                     "schema": None,
-                    "columns": inferred_to_columns(inferred),
+                    "columns": inferred_to_columns(c["schema"]),
                     "primary_key": (
                         {"name": None, "columns": ["_id"]} if pk else None
                     ),
@@ -434,14 +609,21 @@ class DocumentLakeSource:
                     "indexes": [],
                     "constraints": [],
                     "comment": None,
-                    "row_count": inferred["documents_sampled"],
+                    "row_count": c["documents"],
                 }
             )
+            if c["malformed"]:
+                n = c["malformed"]
+                malformed.append(
+                    f"{c['name']}: {n} malformed JSON line{'s' if n > 1 else ''} skipped"
+                )
+        for w in malformed:
+            log.warning(w)
         return {
             "format_version": FORMAT_VERSION,
             "database_info": {
                 "name": name or os.path.basename(self.path.rstrip("/")),
-                "size_bytes": total_size,
+                "size_bytes": sum(os.path.getsize(f) for f in files.values()),
                 "access_level": "Full",
                 "collection_status": "Success",
             },
@@ -453,13 +635,13 @@ class DocumentLakeSource:
             "functions": [],
             "triggers": [],
             "custom_types": [],
-            "samples": None,
+            "samples": [c["sample"] for c in surveyed] if sample > 0 else None,
             "quality_metrics": None,
             "collection_metadata": {
                 "collector_version": COLLECTOR,
                 "collected_at": datetime.now(timezone.utc).isoformat(),
                 "collection_duration_ms": int((time.monotonic() - t_start) * 1000),
                 # warn_sensitive pass (adapters/config/sampling.rs:44)
-                "warnings": detect_sensitive_columns(tables),
+                "warnings": detect_sensitive_columns(tables) + malformed,
             },
         }

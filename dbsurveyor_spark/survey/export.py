@@ -696,7 +696,8 @@ def validate_schema_doc(doc: dict[str, Any]) -> list[str]:
         if t["name"] in names:
             problems.append(f"duplicate table {t['name']!r}")
         names.add(t["name"])
-        if not t.get("columns"):
+        # a schemaless collection with no documents has no fields to report
+        if not t.get("columns") and t.get("row_count") != 0:
             problems.append(f"table {t['name']!r} has no columns")
         positions = [c["ordinal_position"] for c in t.get("columns", [])]
         if positions != list(range(1, len(positions) + 1)):

@@ -73,3 +73,27 @@ def assert_frames_match(spark_df, duck_df: pd.DataFrame, key: str) -> None:
                 assert xn and yn, f"{key}.{col}[{i}]: {x!r} != {y!r} (null mismatch)"
                 continue
             assert x == y, f"{key}.{col}[{i}]: {x!r} != {y!r}"
+
+
+def jobs_in_window(spark, group: str, fn) -> tuple[set[int], set[int]]:
+    """(every job ``fn`` submitted, the jobs of ``group``) with ``fn`` run
+    under ``group``: one-job sentinels before and after, each in a group
+    of its own, bound the window of job ids."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def sentinel(name: str) -> int:
+        sc.setJobGroup(f"{group}-{name}", name)
+        sc.parallelize([1], 1).count()  # exactly one job
+        (job,) = tracker.getJobIdsForGroup(f"{group}-{name}")
+        return job
+
+    start = sentinel("start")
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        end = sentinel("end")
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return set(range(start + 1, end)), set(tracker.getJobIdsForGroup(group))

@@ -12,15 +12,26 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
 import pytest
 
 from dbsurveyor_spark.sources.documents import (
+    _EXT_JSON_TYPES,
     DocumentLakeSource,
     detect_ordering_strategy,
     inferred_to_columns,
+    probe_collections,
+    read_lines,
+    survey_collections,
     type_name_to_unified,
 )
+
+from .conftest import jobs_in_window
+
+# a docs: collect with samples runs the probe, the inference and the
+# samples; AQE runs each shuffle stage as a job of its own
+MAX_COLLECT_JOBS = 8
 
 
 @pytest.fixture(scope="module")
@@ -229,6 +240,10 @@ def test_survey_document_validates(spark, lake):
     assert users["row_count"] == 3
     unord = next(t for t in doc["tables"] if t["name"] == "unordered")
     assert unord["primary_key"] is None
+    # the junk line in users.jsonl is reported; clean collections add nothing
+    assert [w for w in doc["collection_metadata"]["warnings"] if "malformed" in w] == [
+        "users: 1 malformed JSON line skipped"
+    ]
     # downstream writers accept the document unchanged
     ref = to_reference_document(doc)
     assert ref["database_info"]["name"] == "mydocs"
@@ -259,3 +274,254 @@ def test_cli_test_docs(lake, capsys):
     assert cli.main(["test", f"docs:{lake}"]) == 0
     assert "3 collections" in capsys.readouterr().out
     assert cli.main(["test", "docs:/nonexistent"]) == 1
+
+
+# ------------------------------------------------------------- edge inputs
+
+
+def _edge_lake(root, kind):
+    d = os.path.join(root, kind)
+    os.makedirs(d)
+    if kind == "empty_file":
+        open(os.path.join(d, "users.jsonl"), "w").close()
+    elif kind == "malformed_only":
+        with open(os.path.join(d, "junk.jsonl"), "w") as f:
+            f.write("{not json\n[1,\n\n")
+    return d
+
+
+@pytest.mark.parametrize("kind", ["empty_lake", "empty_file", "malformed_only"])
+def test_edge_inputs_survive_the_pipeline(spark, tmp_path, kind):
+    from dbsurveyor_spark import cli
+
+    lake = _edge_lake(str(tmp_path), kind)
+    out = str(tmp_path / "doc.json")
+    for argv in (
+        ["collect", f"docs:{lake}", "--sample", "3", "-o", out],
+        ["validate", out],
+        ["generate", out, "--format", "markdown", "-o", out + ".md"],
+        ["sql", out, "-o", out + ".sql"],
+    ):
+        assert cli.main(argv) == 0, argv
+    doc = json.load(open(out))
+    if kind == "empty_lake":
+        assert doc["tables"] == [] and doc["samples"] == []
+        return
+    (table,) = doc["tables"]
+    assert table["row_count"] == 0 and table["columns"] == []
+    (sample,) = doc["samples"]
+    assert sample["sample_size"] == 0 and sample["rows"] == []
+    assert any("less than requested" in w for w in sample["warnings"])
+    if kind == "malformed_only":
+        assert "junk: 2 malformed JSON lines skipped" in (
+            doc["collection_metadata"]["warnings"]
+        )
+
+
+def test_zero_row_table_may_have_no_columns():
+    from dbsurveyor_spark.survey.export import FORMAT_VERSION, validate_schema_doc
+
+    def doc(row_count):
+        table = {"name": "t", "columns": [], "primary_key": None, "row_count": row_count}
+        return {
+            "format_version": FORMAT_VERSION,
+            "database_info": {"name": "d"},
+            "tables": [table],
+        }
+
+    assert validate_schema_doc(doc(0)) == []
+    assert validate_schema_doc(doc(5)) == ["table 't' has no columns"]
+    assert validate_schema_doc(doc(None)) == ["table 't' has no columns"]
+
+
+# ----------------------------------- inference against a walker of the reference
+
+
+def _bson_type(v):
+    """`type_mapping.rs` type name of a decoded JSON value."""
+    if v is None:
+        return "null"
+    if isinstance(v, bool):
+        return "bool"
+    if isinstance(v, int):
+        return "int64"
+    if isinstance(v, float):
+        return "double"
+    if isinstance(v, str):
+        return "string"
+    if isinstance(v, list):
+        return "array"
+    wrappers = [t for k, t in _EXT_JSON_TYPES.items() if k in v]
+    return wrappers[-1] if wrappers else "object"
+
+
+def walk_schema(docs, max_depth=8):
+    """(fields, object depth) of ``docs`` by `schema_inference.rs:125
+    analyze_document`: each document depth-first in corpus order, keys in
+    sorted order (the VARIANT canonical order), recursing into objects but
+    not into arrays or Extended JSON wrappers, to ``max_depth`` levels."""
+    seen: dict[str, dict[str, int]] = {}  # path → type → count, in discovery order
+    deepest = 0
+
+    def visit(obj, prefix, level):
+        nonlocal deepest
+        deepest = max(deepest, level)
+        for key in sorted(obj):
+            path = f"{prefix}.{key}" if prefix else key
+            t = _bson_type(obj[key])
+            types = seen.setdefault(path, {})
+            types[t] = types.get(t, 0) + 1
+            if t == "object" and level < max_depth:
+                visit(obj[key], path, level + 1)
+
+    for doc in docs:
+        visit(doc, "", 1)
+    fields = []
+    for i, (path, types) in enumerate(seen.items()):
+        non_null = [(n, t) for t, n in types.items() if t != "null"]
+        fields.append(
+            {
+                "name": path,
+                "observed_types": sorted(types),
+                "unified_type": type_name_to_unified(max(non_null)[1] if non_null else "null"),
+                "is_nullable": sum(types.values()) < len(docs) or "null" in types,
+                "ordinal_position": i + 1,
+            }
+        )
+    return fields, deepest
+
+
+def _nested(depth):
+    doc = {"v": 1}
+    for i in range(depth - 1):
+        doc = {f"k{i}": doc, "s": i}
+    return doc
+
+
+SHAPES = {
+    "deep5": [
+        {"a": {"b": {"c": {"d": {"e": 1}}}}, "z": 1},
+        {"a": {"b": {"c": "flat"}}, "y": None},
+        {"a": {"b": {"c": {"d": {"e": "x", "f": True}}}}},
+    ],
+    "odd_keys": [
+        {"x.y": 1, "a<b>": {"c d": 2, "q`r": True, "`": {"<": 1.5}}, "sp ace": None},
+        {"x.y": "s", "a<b>": {"c d": None}, "> `>`": {"``": 3}},
+    ],
+    "arrays": [
+        {"items": [{"k": 1}, {"k": {"deep": 2}}], "tags": ["a"], "m": [[{"x": 1}]]},
+        {"items": [], "n": {"inner": [{"z": 1}]}},
+    ],
+    "wrappers": [
+        {
+            "_id": {"$oid": "a" * 24},
+            "meta": {"at": {"$date": "2024-01-01T00:00:00Z"}, "n": {"$numberLong": "5"}},
+        },
+        {"_id": {"$oid": "b" * 24}, "meta": {"at": None, "tags": {"k": "v"}}},
+    ],
+    # an object in one document and a string in another: a merged
+    # schema_of_variant_agg reports the path as VARIANT, hiding a.b.c
+    "conflict": [{"a": "x"}, {"a": {"b": {"c": 1}}}],
+    "deep10": [_nested(10), {"s": 0}],
+    "empty_object": [{"e": {}}, {"e": {"f": 1}}],
+}
+
+
+@pytest.fixture(scope="module")
+def shapes(spark, tmp_path_factory):
+    d = tmp_path_factory.mktemp("shapes")
+    for name, docs in SHAPES.items():
+        with open(os.path.join(d, f"{name}.jsonl"), "w") as f:
+            f.write("".join(json.dumps(doc) + "\n" for doc in docs))
+    files = DocumentLakeSource(str(d)).collection_files()
+    surveyed = {c["name"]: c for c in survey_collections(spark, files)}
+    return files, surveyed
+
+
+@pytest.mark.parametrize("name", sorted(SHAPES))
+def test_inference_matches_reference_walker(shapes, name):
+    _, surveyed = shapes
+    want, _ = walk_schema(SHAPES[name])
+    keys = ("name", "observed_types", "unified_type", "is_nullable", "ordinal_position")
+    got = [{k: f[k] for k in keys} for f in surveyed[name]["schema"]["fields"]]
+    assert got == want
+
+
+def test_ten_deep_document_stops_at_max_depth(shapes):
+    _, surveyed = shapes
+    names = [f["name"] for f in surveyed["deep10"]["schema"]["fields"]]
+    # eight levels of keys; the eighth-level object is typed, not descended
+    assert max(n.count(".") for n in names) == 7
+    eighth = next(f for f in surveyed["deep10"]["schema"]["fields"] if f["name"].endswith(".k1"))
+    assert eighth["name"].count(".") == 7 and eighth["observed_types"] == ["object"]
+
+
+def _container_depth(value):
+    children = value.values() if isinstance(value, dict) else value
+    if not isinstance(value, (dict, list)):
+        return 0
+    return 1 + max(map(_container_depth, children), default=0)
+
+
+def test_depth_probe_bounds(spark, shapes):
+    # at least the object depth the walker descends (never too shallow),
+    # at most the object-and-array depth (names never add levels)
+    files, _ = shapes
+    probe = probe_collections(read_lines(spark, files), 8)
+    for name, docs in SHAPES.items():
+        documents, malformed, levels = probe[name]
+        assert (documents, malformed) == (len(docs), 0)
+        deepest = max(map(_container_depth, docs))
+        assert min(8, walk_schema(docs)[1]) <= levels <= min(8, deepest), name
+
+
+# ------------------------------------------------------- jobs and plan shape
+
+
+def test_collect_job_count_guard(spark, lake, tmp_path):
+    from dbsurveyor_spark import cli
+
+    out = str(tmp_path / "docs.json")
+    rc = []
+    every, grouped = jobs_in_window(
+        spark,
+        "documents-test-collect",
+        lambda: rc.append(cli.main(["collect", f"docs:{lake}", "--sample", "2", "-o", out])),
+    )
+    assert rc == [0]
+    assert len(json.load(open(out))["samples"]) == 3
+    assert every == grouped
+    assert len(grouped) <= MAX_COLLECT_JOBS, len(grouped)
+
+
+def test_samples_plan_one_top_n_per_collection(spark, tmp_path, monkeypatch):
+    n_docs, sample = 300, 4
+    for name in ("alpha", "beta"):
+        with open(tmp_path / f"{name}.jsonl", "w") as f:
+            for i in range(n_docs):
+                f.write(json.dumps({"_id": i, "v": {"w": i % 7}}) + "\n")
+    frame_cls = type(spark.range(1))
+    collect = frame_cls.collect
+    seen = []  # (physical plan, rows returned) of every collect()
+
+    def spy(self):
+        rows = collect(self)
+        seen.append((self._jdf.queryExecution().executedPlan().toString(), len(rows)))
+        return rows
+
+    monkeypatch.setattr(frame_cls, "collect", spy)
+    doc = DocumentLakeSource(str(tmp_path)).survey(spark, sample=sample)
+    monkeypatch.undo()
+
+    assert [s["sample_size"] for s in doc["samples"]] == [sample, sample]
+    top_n = [plan for plan, _ in seen if "TakeOrderedAndProject" in plan]
+    assert len(top_n) == 1
+    assert top_n[0].count("TakeOrderedAndProject") == 2
+    for plan, _ in seen:
+        # a global sort prints as `Sort [keys], true, n`; the inference's
+        # sort aggregate only sorts within partitions (`false`)
+        assert not re.search(r"\bSort \[.*\], true, \d", plan), plan
+    # only metadata-sized rows and the samples reach the driver: one probe
+    # row per collection, one row per field, the sample rows
+    n_fields = sum(len(t["columns"]) for t in doc["tables"])
+    assert sorted(n for _, n in seen) == sorted([2, n_fields, 2 * sample])

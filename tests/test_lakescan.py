@@ -29,7 +29,7 @@ from dbsurveyor_spark.survey.lakescan import survey_lake
 from dbsurveyor_spark.survey.quality import collect_quality_metrics
 from dbsurveyor_spark.survey.qualityconfig import QualityConfig
 
-from .conftest import SF_SMALL, assert_frames_match
+from .conftest import SF_SMALL, assert_frames_match, jobs_in_window
 
 TESTDATA = os.path.dirname(SF_SMALL)
 SAMPLE = 5
@@ -273,30 +273,6 @@ def test_throttle_spaces_per_table_operations(spark, monkeypatch):
     assert sleeps.count(throttle_ms / 1000.0) >= 2 * (len(TABLES) - 1)
 
 
-def _jobs_in_window(spark, group: str, fn) -> tuple[set[int], set[int]]:
-    """(every job ``fn`` submitted, the jobs of ``group``) with ``fn`` run
-    under ``group``: one-job sentinels before and after, each in a group
-    of its own, bound the window of job ids."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-
-    def sentinel(name: str) -> int:
-        sc.setJobGroup(f"{group}-{name}", name)
-        sc.parallelize([1], 1).count()  # exactly one job
-        (job,) = tracker.getJobIdsForGroup(f"{group}-{name}")
-        return job
-
-    start = sentinel("start")
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        end = sentinel("end")
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return set(range(start + 1, end)), set(tracker.getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize(
     "name, fn",
     [
@@ -308,7 +284,7 @@ def _jobs_in_window(spark, group: str, fn) -> tuple[set[int], set[int]]:
     ],
 )
 def test_pool_jobs_keep_the_callers_job_group(spark, name, fn):
-    every, grouped = _jobs_in_window(spark, f"lakescan-test-{name}", lambda: fn(spark))
+    every, grouped = jobs_in_window(spark, f"lakescan-test-{name}", lambda: fn(spark))
     assert every  # the window saw the work
     assert every == grouped
 
@@ -316,7 +292,7 @@ def test_pool_jobs_keep_the_callers_job_group(spark, name, fn):
 def test_collect_job_count_guard(spark, tmp_path):
     out = tmp_path / "doc.json"
     rc = []
-    every, grouped = _jobs_in_window(
+    every, grouped = jobs_in_window(
         spark,
         "lakescan-test-collect",
         lambda: rc.append(
