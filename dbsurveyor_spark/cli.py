@@ -16,11 +16,11 @@ exposes the same verbs over the Spark-lake engine:
   python -m dbsurveyor_spark.cli sql <schema.json> [-o OUT]
   python -m dbsurveyor_spark.cli validate <schema.json>
 
-Sources: a parquet-lake directory (the engine's native input),
-`sqlite:///path.db` (sources/sqlite.py), or `docs:/dir` — a document lake
-of `<collection>.jsonl` files surveyed via distributed variant-based
-schema inference (sources/documents.py, the MongoDB-adapter analog). JDBC
-URLs are accepted by `test` for URL/credential validation (a live server
+Sources: a lake directory of parquet, csv or JSON-lines tables (the
+engine's native input), `sqlite:///path.db` (sources/sqlite.py), or
+`docs:/dir` — a document lake of `<collection>.jsonl` files surveyed via
+distributed variant-based schema inference (sources/documents.py, the
+MongoDB-adapter analog). JDBC URLs are accepted by `test` for URL/credential validation (a live server
 is needed to go further).
 Sampling fills the document's `samples` with reference-shaped TableSample
 entries (models.rs:399) — redacted per security.py's mode BEFORE the rows
@@ -36,7 +36,7 @@ import sys
 from typing import Any
 
 SOURCE_TYPES = (
-    ("parquet-lake", "directory of <table>.parquet files (native)"),
+    ("parquet-lake", "directory of parquet, csv or json-lines tables (native)"),
     ("sqlite", "sqlite:///path.db — PRAGMA-based schema + Spark-read rows"),
     ("jdbc", "jdbc:postgresql://… / jdbc:mysql://… via spark.read.jdbc"),
     ("docs", "docs:/dir of <collection>.jsonl — schemaless document lake"),
@@ -171,27 +171,6 @@ def cmd_collect(args: argparse.Namespace) -> int:
             databases_filtered=databases_filtered,
         )
     elif _is_lake_dir(args.source):
-        from .catalog import TABLES, table_path
-
-        if not any(
-            os.path.exists(table_path(args.source, t)) for t in TABLES
-        ):
-            # a directory of loose parquet/csv/jsonl files, not the fixed
-            # catalog — the generic file-lake collector handles it
-            from .sources.file_lake import collect_file_lake_schema
-
-            if args.sample or args.enable_quality:
-                print(
-                    "warning: --sample/--enable-quality apply to catalog "
-                    "lakes only; ignored for generic file lakes",
-                    file=sys.stderr,
-                )
-            doc = collect_file_lake_schema(
-                spark,
-                args.source,
-                name=args.name or os.path.basename(args.source.rstrip("/")),
-            )
-            return _emit_collect(doc, args)
         cfg = None
         if args.enable_quality:
             from .survey.qualityconfig import (
@@ -214,26 +193,16 @@ def cmd_collect(args: argparse.Namespace) -> int:
             except ValueError as exc:
                 print(f"invalid quality config: {exc}", file=sys.stderr)
                 return 2
-        from .survey.lakescan import MissingTablesError
-
-        try:
-            doc = collect_database_schema(
-                spark,
-                args.source,
-                name=args.name or os.path.basename(args.source.rstrip("/")),
-                infer_keys=not args.no_infer_keys,
-                sample=args.sample or 0,
-                redact_mode=args.redact_mode,
-                quality=cfg,
-                throttle_ms=args.throttle,
-            )
-        except MissingTablesError as exc:
-            # a lake holding only some of the catalog's tables
-            print(
-                f"partial catalog lake: missing {', '.join(exc.missing)}",
-                file=sys.stderr,
-            )
-            return 1
+        doc = collect_database_schema(
+            spark,
+            args.source,
+            name=args.name or os.path.basename(args.source.rstrip("/")),
+            infer_keys=not args.no_infer_keys,
+            sample=args.sample or 0,
+            redact_mode=args.redact_mode,
+            quality=cfg,
+            throttle_ms=args.throttle,
+        )
     elif args.source.startswith("sqlite:"):
         from .sources.sqlite import SqliteSource
 
@@ -340,15 +309,14 @@ def cmd_test(args: argparse.Namespace) -> int:
     """Connection test (dbsurveyor-collect test): cheapest possible probe."""
     src = args.source
     if _is_lake_dir(src):
-        from .catalog import TABLES
+        from .sources.file_lake import discover_tables
 
-        present = [
-            t
-            for t in TABLES
-            if os.path.exists(os.path.join(src, f"{t}.parquet"))
-        ]
-        print(f"OK parquet-lake: {len(present)}/{len(TABLES)} tables present")
-        return 0 if present else 1
+        n_tables = len(discover_tables(src))
+        if not n_tables:
+            print(f"FAIL lake: no surveyable table in {src}", file=sys.stderr)
+            return 1
+        print(f"OK lake: {n_tables} tables")
+        return 0
     if src.startswith("sqlite:"):
         from .sources.sqlite import SqliteSource
 

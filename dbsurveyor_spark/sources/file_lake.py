@@ -1,6 +1,4 @@
-"""Generic file-lake survey: ANY directory of parquet / CSV / JSON-lines
-files — not just the fixed test catalog — into the portable schema
-document.
+"""Tables of a file lake: ANY directory of parquet / CSV / JSON-lines files.
 
 Reference parity: the collect surface (`adapters/*` schema collection)
 pointed at loose files, the "survey this export directory" case a
@@ -8,14 +6,13 @@ lake-side collector must handle. Table discovery is by extension (a
 single-format subdirectory counts as one partitioned table, matching how
 Spark writes datasets); schemas come from parquet footers or one
 inference pass for csv/jsonl (`sources/files.py` readers: PERMISSIVE +
-explicit corrupt-record column). Row counts are one count() per table —
-metadata-only for parquet, a single scan for text formats.
+explicit corrupt-record column). The survey itself is the one-scan lake
+collect (`survey/lakescan.py`, `survey/export.collect_database_schema`).
 """
 
 from __future__ import annotations
 
 import os
-from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -39,9 +36,10 @@ def discover_tables(lake_dir: str) -> dict[str, tuple[str, str]]:
     """{table_name: (path, format)} for every surveyable entry.
 
     Files map by stem; a subdirectory whose data files share one supported
-    extension maps as a single (partitioned) table. Mixed-format or empty
-    directories are skipped — a collector reports what it can read and
-    leaves the rest to the warnings channel.
+    extension maps as a single (partitioned) table, named by its stem too
+    (Spark writes `orders.parquet/` as a directory of part files).
+    Mixed-format or empty directories are skipped — a collector reports
+    what it can read and leaves the rest to the warnings channel.
     """
     out: dict[str, tuple[str, str]] = {}
     if not os.path.isdir(lake_dir):
@@ -60,7 +58,8 @@ def discover_tables(lake_dir: str) -> dict[str, tuple[str, str]]:
                 if _entry_format(f)
             }
             if len(fmts) == 1:
-                out[entry] = (full, fmts.pop())
+                name = os.path.splitext(entry)[0] if _entry_format(entry) else entry
+                out[name] = (full, fmts.pop())
     return out
 
 
@@ -75,91 +74,9 @@ def read_lake_table(spark: SparkSession, path: str, fmt: str) -> DataFrame:
         # Footer-merge cost is exactly what a schema collector signs up
         # for; data pages are untouched.
         return spark.read.option("mergeSchema", "true").parquet(path)
-    if fmt == "csv":
-        return read_csv(spark, path)
-    return read_json(spark, path)
-
-
-def collect_file_lake_schema(
-    spark: SparkSession,
-    lake_dir: str,
-    name: str | None = None,
-    warn_sensitive: bool = True,
-) -> dict[str, Any]:
-    """Schema document over a generic file lake (same envelope as
-    `survey.export.collect_database_schema`; validates against the
-    reference JSON Schema). No PK/FK inference — loose files carry no
-    declared keys and arbitrary tables offer no candidate list; the
-    per-table `comment` records the storage format instead."""
-    import time
-    from datetime import datetime, timezone
-
-    from ..security import detect_sensitive_columns
-    from ..survey.export import COLLECTOR, FORMAT_VERSION, _dir_size, _sql_type
-
-    t_start = time.monotonic()
-    discovered = discover_tables(lake_dir)
-    tables: list[dict[str, Any]] = []
-    warnings: list[str] = []
-    for tname, (path, fmt) in discovered.items():
-        try:
-            df = read_lake_table(spark, path, fmt)
-            row_count = df.count()
-        except Exception as exc:  # unreadable file: report, keep going
-            warnings.append(f"{tname}: collection failed: {exc}")
-            continue
-        tables.append(
-            {
-                "name": tname,
-                "schema": None,
-                "columns": [
-                    {
-                        "name": f.name,
-                        "data_type": _sql_type(f.dataType),
-                        "is_nullable": f.nullable,
-                        "is_primary_key": False,
-                        "is_auto_increment": False,
-                        "default_value": None,
-                        "comment": None,
-                        "ordinal_position": i + 1,
-                    }
-                    for i, f in enumerate(df.schema.fields)
-                ],
-                "primary_key": None,
-                "foreign_keys": [],
-                "indexes": [],
-                "constraints": [],
-                "comment": f"format={fmt}",
-                "row_count": int(row_count),
-            }
-        )
-    if warn_sensitive:
-        warnings.extend(detect_sensitive_columns(tables))
-    return {
-        "format_version": FORMAT_VERSION,
-        "database_info": {
-            "name": name or os.path.basename(os.path.abspath(lake_dir)),
-            "version": None,
-            "size_bytes": _dir_size(lake_dir),
-            "encoding": "UTF-8",
-            "is_system_database": False,
-            "access_level": "Full",
-            "collection_status": "Success",
-        },
-        "tables": tables,
-        "views": [],
-        "indexes": [],
-        "constraints": [],
-        "procedures": [],
-        "functions": [],
-        "triggers": [],
-        "custom_types": [],
-        "samples": None,
-        "quality_metrics": None,
-        "collection_metadata": {
-            "collector_version": COLLECTOR,
-            "collected_at": datetime.now(timezone.utc).isoformat(),
-            "collection_duration_ms": int((time.monotonic() - t_start) * 1000),
-            "warnings": warnings,
-        },
-    }
+    df = read_csv(spark, path) if fmt == "csv" else read_json(spark, path)
+    if df.columns == ["_corrupt_record"]:
+        # every line is malformed; Spark also refuses any query that
+        # references only the corrupt-record column
+        raise ValueError("no line parses as a record")
+    return df

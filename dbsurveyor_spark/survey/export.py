@@ -29,8 +29,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from ..catalog import TABLES
 from ..security import detect_sensitive_columns
+from ..sources.file_lake import discover_tables
 from .lakescan import survey_lake
 from .qualityconfig import QualityConfig
 
@@ -68,7 +68,7 @@ def _sql_type(dt: T.DataType) -> str:
 
 def collect_database_schema(
     spark: SparkSession,
-    sf_dir: str,
+    lake_dir: str,
     name: str = "testdata",
     infer_keys: bool = True,
     warn_sensitive: bool = True,
@@ -78,28 +78,31 @@ def collect_database_schema(
     quality: QualityConfig | None = None,
     throttle_ms: int | None = None,
 ) -> dict[str, Any]:
-    """Build the portable schema document for every catalog table.
+    """Build the portable schema document for every table of a file lake:
+    any directory of parquet, csv or JSON-lines tables
+    (`sources/file_lake.discover_tables`).
 
     The whole document comes from ONE scan of the lake
     (`lakescan.survey_lake`): each table is loaded once, one packed
     aggregate gives every row count (and quality pass 1), one value
     shuffle tests every PK/FK candidate when `infer_keys`, one more
     aggregate counts quality pass 2's outliers, and `sample` > 0 fills
-    `samples` with redacted heads — about 55 Spark jobs for the ten
-    tables, however many facts the document records. Inferred keys also materialize as
-    index/constraint entries (models.rs:133 Index, models.rs:156
-    Constraint shapes): a lake table has no physical b-tree, but the
-    inferred unique key IS the logical index a reader of the document
-    needs. Raises `lakescan.MissingTablesError` before any Spark work when
-    a catalog table is absent.
+    `samples` with redacted heads — about 55 Spark jobs for the catalog's
+    ten tables, however many facts the document records. Key candidates
+    are the catalog's hints, applied to whichever hinted tables and
+    columns the lake holds; other tables get no keys. Inferred keys also
+    materialize as index/constraint entries (models.rs:133 Index,
+    models.rs:156 Constraint shapes): a lake table has no physical b-tree,
+    but the inferred unique key IS the logical index a reader of the
+    document needs. Each table's `comment` records its storage format; a
+    table that fails to load is named in the warnings instead.
     """
     import time
 
     t_start = time.monotonic()
     scan = survey_lake(
         spark,
-        sf_dir,
-        TABLES,
+        lake_dir,
         infer_keys=infer_keys,
         sample=sample,
         redact_mode=redact_mode,
@@ -110,8 +113,7 @@ def collect_database_schema(
     fks_by_table = scan.foreign_keys
 
     tables = []
-    for tname in TABLES:
-        schema = scan.frames[tname].schema
+    for tname, df in scan.frames.items():
         pk_cols = pk_by_table.get(tname, [])
         columns = [
             {
@@ -124,7 +126,7 @@ def collect_database_schema(
                 "comment": None,
                 "ordinal_position": i + 1,
             }
-            for i, f in enumerate(schema.fields)
+            for i, f in enumerate(df.schema.fields)
         ]
         fks = fks_by_table.get(tname, [])
         indexes = (
@@ -178,7 +180,7 @@ def collect_database_schema(
                 "foreign_keys": fks,
                 "indexes": indexes,
                 "constraints": constraints,
-                "comment": None,
+                "comment": f"format={scan.sources[tname][1]}",
                 "row_count": scan.row_counts[tname],
             }
         )
@@ -188,7 +190,7 @@ def collect_database_schema(
         "database_info": {
             "name": name,
             "version": None,
-            "size_bytes": _dir_size(sf_dir),
+            "size_bytes": _lake_size([path for path, _ in scan.sources.values()]),
             "encoding": "UTF-8",
             "is_system_database": False,
             "access_level": "Full",
@@ -212,9 +214,8 @@ def collect_database_schema(
             "collection_duration_ms": int((time.monotonic() - t_start) * 1000),
             # warn_sensitive pass over collected column names
             # (adapters/config/sampling.rs:44 SamplingConfig.warn_sensitive)
-            "warnings": (
-                detect_sensitive_columns(tables) if warn_sensitive else []
-            ),
+            "warnings": scan.warnings
+            + (detect_sensitive_columns(tables) if warn_sensitive else []),
         },
     }
 
@@ -229,11 +230,12 @@ def enumerate_lake_databases(
     (`adapters/postgres/enumeration.rs:76 ListDatabasesOptions`, with
     `SYSTEM_DATABASES` filtered unless `include_system`).
 
-    A "database" is an immediate subdirectory holding at least one
-    ``*.parquet`` or ``*.jsonl`` entry. System databases are the lake's
-    equivalent of ``template0``/``template1``: directories whose name
-    starts with ``.`` or ``_`` (checkpoint dirs, scratch space). Names in
-    ``exclude`` are dropped, mirroring ``--exclude-databases``.
+    A "database" is an immediate subdirectory holding at least one table
+    that `sources/file_lake.discover_tables` finds (parquet, csv or
+    JSON-lines). System databases are the lake's equivalent of
+    ``template0``/``template1``: directories whose name starts with ``.``
+    or ``_`` (checkpoint dirs, scratch space). Names in ``exclude`` are
+    dropped, mirroring ``--exclude-databases``.
     Driver-side directory listing only — no Spark job.
     """
     excluded = {e.strip() for e in exclude if e.strip()}
@@ -249,11 +251,10 @@ def enumerate_lake_databases(
         if not include_system and name.startswith((".", "_")):
             continue
         try:
-            entries = os.listdir(path)
+            if discover_tables(path):
+                found[name] = path
         except OSError:
             continue
-        if any(e.endswith((".parquet", ".jsonl")) for e in entries):
-            found[name] = path
     return found
 
 
@@ -331,16 +332,15 @@ def collect_multi_database_schema(
     }
 
 
-def _dir_size(sf_dir: str) -> int:
+def _lake_size(paths: list[str]) -> int:
     total = 0
-    for t in TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
+    for p in paths:
         if os.path.isdir(p):
             # Spark-written tables are directories of part files; getsize on
             # the directory entry itself would misreport the content size.
             for root, _dirs, files in os.walk(p):
                 total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-        elif os.path.exists(p):
+        else:
             total += os.path.getsize(p)
     return total
 

@@ -1,29 +1,34 @@
-"""One scan per lake `collect`: every catalog table is read once.
+"""One scan per lake `collect`: every table of the lake is read once.
 
 The reference's `collect` visits each table once for its schema, key
 detection, sampling and quality analysis (`collect.rs`, `sampling.rs:160`,
-`quality/analyzer.rs`). `survey_lake` does the same over a parquet lake and
-keeps the number of Spark jobs independent of how many facts the document
-records, the mergeable one-pass summary idea of *Approximation Algorithms
-for Large Scale Data Analysis* (PODS 2021) applied to the whole survey:
+`quality/analyzer.rs`). `survey_lake` does the same over any directory of
+parquet, csv or JSON-lines tables (`sources/file_lake.discover_tables`)
+and keeps the number of Spark jobs independent of how many facts the
+document records, the mergeable one-pass summary idea of *Approximation
+Algorithms for Large Scale Data Analysis* (PODS 2021) applied to the
+whole survey:
 
-1. load each table once (one parquet-schema job each), from a bounded
-   driver pool;
+1. load each table once, from a bounded driver pool: a catalog-named
+   `<table>.parquet` through `catalog.load_table` (one parquet-schema job),
+   any other table through `file_lake.read_lake_table`; a table that
+   fails to load becomes a warning;
 2. pass 1 — one action for all tables: each table's 1-row aggregate (row
    count, and with quality the `_quality_pass1` sketches and moments) is
    packed as `to_json(struct(*))` so the differently-shaped rows union and
    collect together; JSON keeps longs exact and Java's double text
    round-trips;
-3. keys — one value shuffle for every PK and FK candidate
+3. keys — one value shuffle for every PK and FK candidate of the
+   catalog's hints whose tables and columns are present
    (`profile.key_inference`), collected in the same packed form;
 4. pass 2 — one action: the outlier counts of every table, packed likewise;
 5. samples — the `orderBy(desc(first column)).limit(n)` head of each
    frame, from the same pool, redacted before it enters the document.
 
 Steps 2 and 4, step 3 and step 5 do not depend on each other and run side
-by side. The ten-table catalog takes about 55 Spark jobs in all (AQE runs
-each shuffle stage of an action as a job of its own), where reading each
-table once per phase took 204.
+by side. The ten-table catalog lake takes about 55 Spark jobs in all (AQE
+runs each shuffle stage of an action as a job of its own), where reading
+each table once per phase took 204.
 
 Jobs submitted from pool threads keep the caller's Spark job group
 (`profile.pool_map`), so the Spark UI and the status store tie them to the
@@ -43,9 +48,11 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
-from ..catalog import TABLES, load_table, table_path
+from ..catalog import TABLES, load_table
 from ..security import redact_rows
+from ..sources.file_lake import discover_tables, read_lake_table
 from .profile import FK_CANDIDATES, PK_CANDIDATES, key_inference, pool_map
 from .quality import (
     _quality_pass1,
@@ -56,21 +63,6 @@ from .quality import (
     table_metrics,
 )
 from .qualityconfig import QualityConfig
-
-
-class MissingTablesError(ValueError):
-    """A catalog lake lacks some of the catalog's tables."""
-
-    def __init__(self, sf_dir: str, missing: list[str]):
-        self.missing = missing
-        super().__init__(
-            f"{sf_dir} is missing catalog tables: {', '.join(missing)}"
-        )
-
-
-def missing_tables(sf_dir: str, tables: list[str] | tuple[str, ...]) -> list[str]:
-    """The ``tables`` with no `<table>.parquet` under ``sf_dir``."""
-    return [t for t in tables if not os.path.exists(table_path(sf_dir, t))]
 
 
 def collect_packed(parts: dict[Any, DataFrame]) -> dict[Any, list[dict]]:
@@ -108,6 +100,8 @@ def sample_tables(
 
     def head(tname: str) -> list[dict]:
         df = frames[tname]
+        if not df.columns:  # an empty csv/jsonl file has no column to order by
+            return []
         return [
             r.asDict(recursive=True)
             for r in df.orderBy(F.desc(df.columns[0])).limit(limit).collect()
@@ -189,10 +183,20 @@ def _infer_keys(
     spark: SparkSession, frames: dict[str, DataFrame]
 ) -> tuple[dict[str, list[str]], dict[str, list[dict[str, Any]]]]:
     """Primary and foreign keys of the scanned tables, in candidate order,
-    from one `key_inference` action over the candidates whose tables are
-    all in ``frames``."""
-    pks = [(t, c) for t, c in PK_CANDIDATES if t in frames]
-    fks = [f for f in FK_CANDIDATES if f[0] in frames and f[2] in frames]
+    from one `key_inference` action over the candidates whose tables and
+    integer columns are all in ``frames``."""
+
+    def present(t: str, c: str) -> bool:
+        return (
+            t in frames
+            and c in frames[t].columns
+            and isinstance(frames[t].schema[c].dataType, IntegralType)
+        )
+
+    pks = [(t, c) for t, c in PK_CANDIDATES if present(t, c)]
+    fks = [f for f in FK_CANDIDATES if present(f[0], f[1]) and present(f[2], f[3])]
+    if not pks and not fks:
+        return {}, {}
     pk_df, fk_df = key_inference(spark, frames, pks, fks)
     got = collect_packed({"pk": pk_df, "fk": fk_df})
     unique = {(r["table_name"], r["column_name"]) for r in got["pk"] if r["is_candidate_key"]}
@@ -223,18 +227,20 @@ def _infer_keys(
 class LakeSurvey:
     """What one scan of a lake found, per table in scan order."""
 
+    sources: dict[str, tuple[str, str]]  # (path, format) of every table tried
     frames: dict[str, DataFrame]
     row_counts: dict[str, int]
     primary_keys: dict[str, list[str]]
     foreign_keys: dict[str, list[dict[str, Any]]]
     samples: list[dict] | None
     quality_metrics: list[dict] | None
+    warnings: list[str]
 
 
 def survey_lake(
     spark: SparkSession,
-    sf_dir: str,
-    tables: list[str] | tuple[str, ...] = TABLES,
+    lake_dir: str,
+    tables: list[str] | tuple[str, ...] | None = None,
     *,
     infer_keys: bool = True,
     sample: int = 0,
@@ -244,26 +250,45 @@ def survey_lake(
     z_threshold: float | None = None,
     throttle_ms: int | None = None,
 ) -> LakeSurvey:
-    """Survey ``tables`` of the lake at ``sf_dir`` with one read of each.
+    """Survey the tables of the lake at ``lake_dir`` with one read of each.
 
-    ``infer_keys`` runs the PK/FK candidates whose tables are all in the
-    scan; ``sample`` > 0 takes that many rows per table; ``quality`` adds
-    the TableQualityMetrics list. Raises `MissingTablesError` before any
-    Spark work when a table file is absent.
+    The tables are every one `discover_tables` finds, catalog tables first
+    in catalog order, or just ``tables`` (a name the lake lacks raises
+    ValueError before any Spark work). A table that fails to load is left
+    out and named in ``warnings``. ``infer_keys`` runs the catalog's PK/FK
+    candidates whose tables and columns are in the scan; ``sample`` > 0
+    takes that many rows per table; ``quality`` adds the
+    TableQualityMetrics list.
 
     After the loads, the passes, the key shuffle and the samples do not
     depend on each other, so they are planned and run side by side from
     the driver pool.
     """
-    missing = missing_tables(sf_dir, tables)
-    if missing:
-        raise MissingTablesError(sf_dir, missing)
-    frames = dict(
-        zip(
-            tables,
-            pool_map(spark, lambda t: load_table(spark, sf_dir, t), list(tables), throttle_ms),
-        )
-    )
+    found = discover_tables(lake_dir)
+    if tables is None:
+        tables = sorted(found, key=lambda t: (TABLES.index(t) if t in TABLES else len(TABLES), t))
+    unknown = [t for t in tables if t not in found]
+    if unknown:
+        raise ValueError(f"{lake_dir} has no table named {', '.join(unknown)}")
+    sources = {t: found[t] for t in tables}
+
+    def load(t: str) -> DataFrame | Exception:
+        path, fmt = sources[t]
+        try:
+            # a catalog <t>.parquet keeps catalog.load_table's type normalisation
+            if fmt == "parquet" and t in TABLES and os.path.basename(path) == f"{t}.parquet":
+                return load_table(spark, lake_dir, t)
+            return read_lake_table(spark, path, fmt)
+        except Exception as exc:  # unreadable table: report it, survey the rest
+            return exc
+
+    loaded = dict(zip(sources, pool_map(spark, load, list(sources), throttle_ms)))
+    frames = {t: df for t, df in loaded.items() if not isinstance(df, Exception)}
+    warnings = [
+        f"{t}: collection failed: {exc}"
+        for t, exc in loaded.items()
+        if isinstance(exc, Exception)
+    ]
     tasks = [lambda: _row_counts_and_quality(frames, quality, rsd, z_threshold)]
     if infer_keys:
         tasks.append(lambda: _infer_keys(spark, frames))
@@ -273,10 +298,12 @@ def survey_lake(
     row_counts, metrics = results.pop(0)
     primary_keys, foreign_keys = results.pop(0) if infer_keys else ({}, {})
     return LakeSurvey(
+        sources=sources,
         frames=frames,
         row_counts=row_counts,
         primary_keys=primary_keys,
         foreign_keys=foreign_keys,
         samples=results.pop(0) if sample else None,
         quality_metrics=metrics,
+        warnings=warnings,
     )

@@ -975,8 +975,10 @@ def collect_quality_metrics(
     state, map-side combinable. `approx_distinct` replaced
     `approx_count_distinct`, whose HyperLogLog++ buffer (410 long columns
     per estimate, no codegen) made pass 1 cost seconds even on tiny tables.
+
+    ``tables`` defaults to every table of the lake; a name the lake lacks
+    raises ValueError.
     """
-    from ..catalog import TABLES
     from .lakescan import survey_lake
 
     if config is None:
@@ -985,7 +987,7 @@ def collect_quality_metrics(
     scan = survey_lake(
         spark,
         sf_dir,
-        list(tables) if tables is not None else list(TABLES),
+        tables,
         infer_keys=False,
         quality=config,
         rsd=rsd,

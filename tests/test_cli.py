@@ -125,6 +125,25 @@ class TestCollect:
         excl = enumerate_lake_databases(str(server_root), exclude=["beta"])
         assert sorted(excl) == ["alpha", "skipme"]
 
+    def test_all_databases_finds_text_databases(self, spark, tmp_path):
+        root = tmp_path / "server"
+        for db in ("csvdb", "ndjsondb", "nothing"):
+            (root / db).mkdir(parents=True)
+        (root / "csvdb" / "t.csv").write_text("a,b\n1,x\n")
+        (root / "ndjsondb" / "u.ndjson").write_text('{"k": 1}\n')
+        (root / "nothing" / "notes.txt").write_text("not a table")
+        from dbsurveyor_spark.survey.export import enumerate_lake_databases
+
+        assert sorted(enumerate_lake_databases(str(root))) == ["csvdb", "ndjsondb"]
+        out = tmp_path / "server.json"
+        assert run(["collect", str(root), "--all-databases", "-o", str(out)]) == 0
+        doc = json.load(open(out))
+        assert doc["collection_metadata"]["databases_collected"] == 2
+        assert {
+            d["database_name"]: [t["name"] for t in d["schema"]["tables"]]
+            for d in doc["databases"]
+        } == {"csvdb": ["t"], "ndjsondb": ["u"]}
+
     def test_all_databases_empty_root_fails(self, tmp_path):
         empty = tmp_path / "empty"
         empty.mkdir()
@@ -140,8 +159,20 @@ class TestSources:
         assert run(["test", SF]) == 0
         assert run(["test", "jdbc:postgresql://u:p%40s@h:5432/d"]) == 0
         outerr = capsys.readouterr().out
-        assert "10/10 tables" in outerr
+        assert "OK lake: 10 tables" in outerr
         assert "p%40s" not in outerr  # credentials never echo
+
+    def test_text_lake_probe(self, tmp_path, capsys):
+        lake = tmp_path / "lake"
+        lake.mkdir()
+        (lake / "t.csv").write_text("a\n1\n")
+        (lake / "u.jsonl").write_text('{"k": 1}\n')
+        assert run(["test", str(lake)]) == 0
+        assert "OK lake: 2 tables" in capsys.readouterr().out
+        empty = tmp_path / "empty"
+        empty.mkdir()
+        assert run(["test", str(empty)]) == 1
+        assert "FAIL lake" in capsys.readouterr().err
 
     def test_sqlite_collect(self, tmp_path):
         db = tmp_path / "mini.db"
@@ -241,6 +272,8 @@ class TestReviewRegressions:
         doc = json.load(open(out))
         # both lakes surveyed (second keyed by full path, not dropped)
         assert doc["collection_metadata"]["databases_discovered"] == 2
+        assert doc["collection_metadata"]["databases_collected"] == 2
+        assert [d["database_name"] for d in doc["databases"]] == ["sf", "sf#2"]
 
     def test_encrypt_plus_compress_rejected(self, tmp_path):
         out = tmp_path / "x.json"

@@ -4,7 +4,8 @@ Every fact the document records is checked against DuckDB over the same
 files, not against the engine: row counts, null counts, the PK/FK oracles
 of the registry, outlier counts and the sample heads. Edge cases: a
 zero-row table, an all-null key column, a lake with nothing for quality
-pass 2 to check, a partial catalog lake. The scan's jobs must all carry
+pass 2 to check, a partial catalog lake, zero-byte and unreadable tables,
+tables written as directories. The scan's jobs must all carry
 the caller's Spark job group, and its job count stays bounded.
 """
 
@@ -219,6 +220,8 @@ def test_no_column_for_pass2(spark, tmp_path):
     (m,) = collect_quality_metrics(spark, lake, ["orders"])
     assert m["analyzed_rows"] == 12
     assert m["anomalies"] == {"outlier_count": 0, "outliers": []}
+    with pytest.raises(ValueError, match="no table named widgets"):
+        collect_quality_metrics(spark, lake, ["orders", "widgets"])
 
 
 def test_non_finite_moments(spark, tmp_path):
@@ -235,18 +238,107 @@ def test_non_finite_moments(spark, tmp_path):
     assert m["anomalies"] == {"outlier_count": 0, "outliers": []}
 
 
-def test_partial_catalog_lake_fails_cleanly(spark, tmp_path, capsys):
+def _cli_pipeline(lake, out) -> None:
+    """collect --sample --enable-quality, then validate, generate and sql."""
+    doc = str(out)
+    for argv in (
+        ["collect", str(lake), "--sample", str(SAMPLE), "--enable-quality", "-o", doc],
+        ["validate", doc],
+        ["generate", doc, "--format", "markdown", "-o", doc + ".md"],
+        ["sql", doc, "-o", doc + ".sql"],
+    ):
+        assert cli.main(argv) == 0, argv
+
+
+def test_partial_catalog_lake_collects(spark, tmp_path, capsys):
     lake = tmp_path / "lake"
     lake.mkdir()
     shutil.copyfile(table_path(SF_SMALL, "orders"), lake / "orders.parquet")
     pq.write_table(pa.table({"w": [1, 2]}), lake / "widgets.parquet")
     out = tmp_path / "doc.json"
-    assert cli.main(["collect", str(lake), "-o", str(out)]) != 0
-    err = capsys.readouterr().err
-    missing = [t for t in TABLES if t != "orders"]
-    assert all(t in err for t in missing), err
-    assert "Traceback" not in err and "AnalysisException" not in err
-    assert not out.exists()
+    _cli_pipeline(lake, out)
+    assert "Traceback" not in capsys.readouterr().err
+    doc = json.load(open(out))
+    tables = {t["name"]: t for t in doc["tables"]}
+    assert list(tables) == ["orders", "widgets"]
+    assert {s["table_name"]: s["sample_size"] for s in doc["samples"]} == {
+        "orders": SAMPLE,
+        "widgets": 2,
+    }
+    assert {m["table_name"]: m["analyzed_rows"] for m in doc["quality_metrics"]} == {
+        "orders": tables["orders"]["row_count"],
+        "widgets": 2,
+    }
+    # the orders file is SF_SMALL's, so the oracle over SF_SMALL restricted
+    # to the present tables is the oracle of this lake
+    with _duck(SF_SMALL) as con:
+        pk, _ = _oracle_keys(con)
+    assert tables["orders"]["primary_key"]["columns"] == [c for t, c in pk if t == "orders"]
+    assert tables["widgets"]["primary_key"] is None
+    assert all(t["foreign_keys"] == [] for t in tables.values())
+
+
+def test_key_candidate_column_must_exist(spark, tmp_path):
+    """Only hinted columns that exist with an integer type are tested:
+    orders lacks o_custkey, and a string c_custkey would fail the key
+    shuffle's bigint cast."""
+    lake = tmp_path / "lake"
+    lake.mkdir()
+    pq.write_table(pa.table({"o_orderkey": [3, 1, 2]}), lake / "orders.parquet")
+    (lake / "customer.csv").write_text("c_custkey,c_name\nc1,a\nc2,b\n")
+    out = tmp_path / "doc.json"
+    _cli_pipeline(lake, out)
+    tables = {t["name"]: t for t in json.load(open(out))["tables"]}
+    assert tables["orders"]["primary_key"]["columns"] == ["o_orderkey"]
+    assert tables["customer"]["primary_key"] is None
+    assert all(t["foreign_keys"] == [] for t in tables.values())
+
+
+def test_zero_byte_text_tables(spark, tmp_path):
+    lake = tmp_path / "lake"
+    lake.mkdir()
+    (lake / "empty.jsonl").write_text("")
+    (lake / "blank.csv").write_text("")
+    (lake / "ok.csv").write_text("a\n1\n")
+    out = tmp_path / "doc.json"
+    _cli_pipeline(lake, out)
+    doc = json.load(open(out))
+    tables = {t["name"]: (t["row_count"], t["columns"]) for t in doc["tables"]}
+    assert tables["empty"] == tables["blank"] == (0, [])
+    assert tables["ok"][0] == 1
+    samples = {s["table_name"]: s["sample_size"] for s in doc["samples"]}
+    assert samples == {"blank": 0, "empty": 0, "ok": 1}
+    analyzed = {m["table_name"]: m["analyzed_rows"] for m in doc["quality_metrics"]}
+    assert analyzed == {"blank": 0, "empty": 0, "ok": 1}
+
+
+def test_unreadable_tables_become_warnings(spark, tmp_path):
+    lake = tmp_path / "lake"
+    lake.mkdir()
+    (lake / "broken.parquet").write_text("not parquet")
+    (lake / "garbage.jsonl").write_text("not json\nnor this\n")
+    (lake / "ok.jsonl").write_text('{"a": 1}\n')
+    out = tmp_path / "doc.json"
+    _cli_pipeline(lake, out)
+    doc = json.load(open(out))
+    assert [t["name"] for t in doc["tables"]] == ["ok"]
+    warnings = doc["collection_metadata"]["warnings"]
+    assert any(w.startswith("broken: collection failed:") for w in warnings), warnings
+    assert any(w.startswith("garbage: collection failed:") for w in warnings), warnings
+
+
+def test_directory_tables_take_the_catalog_path(spark, tmp_path):
+    lake = tmp_path / "lake"
+    for t in ("region", "nation"):
+        spark.read.parquet(table_path(SF_SMALL, t)).repartition(2).write.parquet(
+            str(lake / f"{t}.parquet")
+        )
+    doc = collect_database_schema(spark, str(lake))
+    tables = {t["name"]: t for t in doc["tables"]}
+    assert list(tables) == ["region", "nation"]
+    assert tables["region"]["primary_key"]["columns"] == ["r_regionkey"]
+    assert tables["nation"]["foreign_keys"][0]["referenced_table"] == "region"
+    assert doc["database_info"]["size_bytes"] > 0
 
 
 # -------------------------------------------------------- throttle and jobs
