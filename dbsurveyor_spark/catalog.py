@@ -24,6 +24,11 @@ from pyspark.sql import DataFrame, SparkSession
 #   session timezone; oracle parity requires a deterministic zone.
 # - arrow: mapInPandas / pandas interchange must be Arrow-batched.
 # - adaptive: runtime coalescing + skew-join splitting at any scale.
+# - useIdInClassName false: a whole-stage class is named without its stage
+#   id, so identical pipelines at different stage ids have identical source
+#   and share one compiled class in Spark's generated-class cache (measured
+#   on a cold sf0.001 lake collect with samples and quality: 161 compiled
+#   classes with ids in the names, 143 without).
 _RUNTIME_CONFS = (
     ("spark.sql.legacy.parquet.nanosAsLong", "true"),
     ("spark.sql.session.timeZone", "UTC"),
@@ -31,6 +36,7 @@ _RUNTIME_CONFS = (
     ("spark.sql.adaptive.enabled", "true"),
     ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
     ("spark.sql.adaptive.skewJoin.enabled", "true"),
+    ("spark.sql.codegen.useIdInClassName", "false"),
 )
 
 

@@ -311,7 +311,7 @@ def cmd_test(args: argparse.Namespace) -> int:
     if _is_lake_dir(src):
         from .sources.file_lake import discover_tables
 
-        n_tables = len(discover_tables(src))
+        n_tables = len(discover_tables(src)[0])
         if not n_tables:
             print(f"FAIL lake: no surveyable table in {src}", file=sys.stderr)
             return 1

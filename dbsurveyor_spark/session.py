@@ -17,6 +17,20 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
+# Entries of Spark's generated-class cache (`spark.sql.codegen.cache.maxEntries`,
+# a static conf, default 100). A class the cache holds is not compiled again
+# (Janino, then the JIT), so the cache must hold every plan shape a session
+# reuses. Measured with scripts/codegen_census.py (4 vCPU, with
+# `useIdInClassName=false` from catalog._RUNTIME_CONFS): a benchmark
+# query_mix pass compiles 206 classes, a lake collect with samples and
+# quality 143, one pass over the whole registry (241 queries, sf0.001) 3055.
+# 4096 holds all of them with a quarter to spare. At the default, every
+# query_mix pass recompiled 222 classes and every repeated collect 283–286.
+# Cost, with the whole registry held after two passes: Metaspace 214 MB and
+# code cache 153 MB, against 190 MB and 128 MB at the default (which
+# compiled 11485 classes in those passes instead of 3119).
+CODEGEN_CACHE_ENTRIES = 4096
+
 
 def physical_ram_mb() -> int:
     """Physical memory of this host in MiB."""
@@ -105,9 +119,18 @@ def get_session(
         # reader rejects; read as raw nanos and convert in catalog.load_table.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        # static: only a session built here gets it, see CODEGEN_CACHE_ENTRIES
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     if master is not None:
         builder = builder.master(master)
     elif not os.environ.get("SPARK_MASTER"):
         builder = builder.master(f"local[{cpus}]")
     return builder.getOrCreate()
+
+
+def classes_compiled(spark: SparkSession) -> int:
+    """Generated classes this JVM has compiled so far: one per miss of
+    Spark's generated-class cache (`CodegenMetrics`)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

@@ -32,24 +32,29 @@ def _entry_format(path: str) -> str | None:
     return SUPPORTED_EXTENSIONS.get(ext)
 
 
-def discover_tables(lake_dir: str) -> dict[str, tuple[str, str]]:
-    """{table_name: (path, format)} for every surveyable entry.
+def discover_tables(lake_dir: str) -> tuple[dict[str, tuple[str, str]], list[str]]:
+    """({table_name: (path, format)}, notes) for every surveyable entry.
 
     Files map by stem; a subdirectory whose data files share one supported
     extension maps as a single (partitioned) table, named by its stem too
-    (Spark writes `orders.parquet/` as a directory of part files).
-    Mixed-format or empty directories are skipped — a collector reports
-    what it can read and leaves the rest to the warnings channel.
+    (Spark writes `orders.parquet/` as a directory of part files). Entries
+    whose stems collide (`t.csv` and `t.jsonl`) are all kept: a
+    `<stem>.parquet` entry, the catalog's shape, keeps the stem first, and
+    each later one is named after its entry (`t_jsonl`). The notes name
+    every such renaming and every mixed-format subdirectory, which is
+    skipped; a collector puts them into its warnings. Entries holding no
+    supported file are not tables and pass without a note.
     """
-    out: dict[str, tuple[str, str]] = {}
     if not os.path.isdir(lake_dir):
         raise ValueError(f"not a directory: {lake_dir}")
+    entries: list[tuple[str, str, str, str]] = []  # (stem, entry, path, format)
+    notes: list[str] = []
     for entry in sorted(os.listdir(lake_dir)):
         full = os.path.join(lake_dir, entry)
         if os.path.isfile(full):
             fmt = _entry_format(entry)
             if fmt:
-                out[os.path.splitext(entry)[0]] = (full, fmt)
+                entries.append((os.path.splitext(entry)[0], entry, full, fmt))
         elif os.path.isdir(full):
             fmts = {
                 _entry_format(f)
@@ -58,9 +63,29 @@ def discover_tables(lake_dir: str) -> dict[str, tuple[str, str]]:
                 if _entry_format(f)
             }
             if len(fmts) == 1:
-                name = os.path.splitext(entry)[0] if _entry_format(entry) else entry
-                out[name] = (full, fmts.pop())
-    return out
+                stem = os.path.splitext(entry)[0] if _entry_format(entry) else entry
+                entries.append((stem, entry, full, fmts.pop()))
+            elif fmts:
+                notes.append(
+                    f"{entry}: skipped, a directory mixing {', '.join(sorted(fmts))}"
+                    " files is not one table"
+                )
+    out: dict[str, tuple[str, str]] = {}
+    for stem, entry, full, fmt in sorted(
+        entries, key=lambda e: (e[0], not e[1].endswith(".parquet"), e[1])
+    ):
+        name = stem
+        if name in out:
+            name = base = entry.replace(".", "_")
+            n = 2
+            while name in out:
+                name, n = f"{base}_{n}", n + 1
+            notes.append(
+                f"{entry}: surveyed as table {name}, since table {stem} is"
+                f" {os.path.basename(out[stem][0])}"
+            )
+        out[name] = (full, fmt)
+    return out, notes
 
 
 def read_lake_table(spark: SparkSession, path: str, fmt: str) -> DataFrame:

@@ -95,7 +95,8 @@ def collect_database_schema(
     models.rs:156 Constraint shapes): a lake table has no physical b-tree,
     but the inferred unique key IS the logical index a reader of the
     document needs. Each table's `comment` records its storage format; a
-    table that fails to load is named in the warnings instead.
+    table that fails to load, a mixed-format subdirectory and a renamed
+    table whose stem another file holds are named in the warnings.
     """
     import time
 
@@ -251,7 +252,7 @@ def enumerate_lake_databases(
         if not include_system and name.startswith((".", "_")):
             continue
         try:
-            if discover_tables(path):
+            if discover_tables(path)[0]:
                 found[name] = path
         except OSError:
             continue

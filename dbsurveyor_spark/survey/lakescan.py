@@ -18,9 +18,9 @@ whole survey:
    packed as `to_json(struct(*))` so the differently-shaped rows union and
    collect together; JSON keeps longs exact and Java's double text
    round-trips;
-3. keys — one value shuffle for every PK and FK candidate of the
-   catalog's hints whose tables and columns are present
-   (`profile.key_inference`), collected in the same packed form;
+3. keys — one scan of each table and one value shuffle for every PK and
+   FK candidate of the catalog's hints whose tables and columns are
+   present (`profile.key_inference`), collected as one frame;
 4. pass 2 — one action: the outlier counts of every table, packed likewise;
 5. samples — the `orderBy(desc(first column)).limit(n)` head of each
    frame, from the same pool, redacted before it enters the document.
@@ -180,7 +180,7 @@ def _row_counts_and_quality(
 
 
 def _infer_keys(
-    spark: SparkSession, frames: dict[str, DataFrame]
+    frames: dict[str, DataFrame],
 ) -> tuple[dict[str, list[str]], dict[str, list[dict[str, Any]]]]:
     """Primary and foreign keys of the scanned tables, in candidate order,
     from one `key_inference` action over the candidates whose tables and
@@ -197,13 +197,12 @@ def _infer_keys(
     fks = [f for f in FK_CANDIDATES if present(f[0], f[1]) and present(f[2], f[3])]
     if not pks and not fks:
         return {}, {}
-    pk_df, fk_df = key_inference(spark, frames, pks, fks)
-    got = collect_packed({"pk": pk_df, "fk": fk_df})
-    unique = {(r["table_name"], r["column_name"]) for r in got["pk"] if r["is_candidate_key"]}
+    keys = [r for r in key_inference(frames, pks, fks).collect() if r["is_key"]]
+    unique = {(r["table_name"], r["column_name"]) for r in keys if r["parent_table"] is None}
     contained = {
-        (r["child_table"], r["child_column"], r["parent_table"], r["parent_column"])
-        for r in got["fk"]
-        if r["is_foreign_key"]
+        (r["table_name"], r["column_name"], r["parent_table"], r["parent_column"])
+        for r in keys
+        if r["parent_table"] is not None
     }
     primary_keys: dict[str, list[str]] = {}
     for t, c in pks:
@@ -221,6 +220,19 @@ def _infer_keys(
                 }
             )
     return primary_keys, foreign_keys
+
+
+def _one_line(exc: Exception) -> str:
+    """The exception's class and the first line of its message; for a JVM
+    error, those of its root cause (its text is a whole Java stack trace)."""
+    java = getattr(exc, "java_exception", None)
+    if java is None:
+        name, message = type(exc).__name__, str(exc)
+    else:
+        while java.getCause() is not None:
+            java = java.getCause()
+        name, message = java.getClass().getSimpleName(), java.getMessage() or ""
+    return f"{name}: {(message.strip().splitlines() or [''])[0]}"
 
 
 @dataclass
@@ -255,7 +267,8 @@ def survey_lake(
     The tables are every one `discover_tables` finds, catalog tables first
     in catalog order, or just ``tables`` (a name the lake lacks raises
     ValueError before any Spark work). A table that fails to load is left
-    out and named in ``warnings``. ``infer_keys`` runs the catalog's PK/FK
+    out and named in ``warnings``, as are the entries `discover_tables`
+    skips or renames. ``infer_keys`` runs the catalog's PK/FK
     candidates whose tables and columns are in the scan; ``sample`` > 0
     takes that many rows per table; ``quality`` adds the
     TableQualityMetrics list.
@@ -264,7 +277,7 @@ def survey_lake(
     depend on each other, so they are planned and run side by side from
     the driver pool.
     """
-    found = discover_tables(lake_dir)
+    found, notes = discover_tables(lake_dir)
     if tables is None:
         tables = sorted(found, key=lambda t: (TABLES.index(t) if t in TABLES else len(TABLES), t))
     unknown = [t for t in tables if t not in found]
@@ -284,14 +297,14 @@ def survey_lake(
 
     loaded = dict(zip(sources, pool_map(spark, load, list(sources), throttle_ms)))
     frames = {t: df for t, df in loaded.items() if not isinstance(df, Exception)}
-    warnings = [
-        f"{t}: collection failed: {exc}"
+    warnings = notes + [
+        f"{t}: collection failed: {_one_line(exc)}"
         for t, exc in loaded.items()
         if isinstance(exc, Exception)
     ]
     tasks = [lambda: _row_counts_and_quality(frames, quality, rsd, z_threshold)]
     if infer_keys:
-        tasks.append(lambda: _infer_keys(spark, frames))
+        tasks.append(lambda: _infer_keys(frames))
     if sample:
         tasks.append(lambda: sample_tables(spark, frames, sample, redact_mode, throttle_ms))
     results = pool_map(spark, lambda task: task(), tasks, throttle_ms)

@@ -17,8 +17,8 @@ Scale notes:
   the HLL sketch `functions.aggregates.approx_distinct` (see
   `column_profile_approx`), which replaced `approx_count_distinct` because
   its one-buffer sketch costs far less per column than HyperLogLog++.
-- key inference (`key_inference`) is one value shuffle over the candidate
-  key columns for every PK and FK test at once.
+- key inference (`key_inference`) is one scan of each table and one value
+  shuffle over the candidate key columns for every PK and FK test at once.
 """
 
 from __future__ import annotations
@@ -278,7 +278,7 @@ PK_CANDIDATES = [
 def survey_pk_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidate-key test per `PK_CANDIDATES` column (`key_inference`)."""
     frames = {t: load_table(spark, sf_dir, t) for t in {t for t, _ in PK_CANDIDATES}}
-    return key_inference(spark, frames, PK_CANDIDATES, [])[0]
+    return pk_view(key_inference(frames, PK_CANDIDATES, []))
 
 
 def _pk_sql() -> str:
@@ -312,112 +312,136 @@ def survey_fk_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     per `FK_CANDIDATES` pair (`key_inference`)."""
     names = {t for ct, _, pt, _ in FK_CANDIDATES for t in (ct, pt)}
     frames = {t: load_table(spark, sf_dir, t) for t in names}
-    return key_inference(spark, frames, [], FK_CANDIDATES)[1]
+    return fk_view(key_inference(frames, [], FK_CANDIDATES))
 
 
 def key_inference(
-    spark: SparkSession,
     frames: dict[str, DataFrame],
     pk_candidates: list[tuple[str, str]],
     fk_candidates: list[tuple[str, str, str, str]],
-) -> tuple[DataFrame, DataFrame]:
-    """PK and FK tests for every candidate off ONE value shuffle.
+) -> DataFrame:
+    """PK and FK tests for every candidate off ONE scan and ONE value shuffle.
 
-    Every candidate column (PK columns, FK children and parents) melts into
-    `(col, v)` rows with `v` cast to bigint; one `groupBy(col, v)` then
-    gives, per column, its row count (the null group included) and its
-    distinct non-null count — the exact PK test `distinct == rows > 0`.
-    The FK pairs ride the same plan: the child's distinct values join a
-    broadcast pairs table, left-semi join the parent's values, and count
-    per pair; both uses read the one exchange (the plan reuses it), the
-    same melt → distinct → join shape as `survey_fk_discovery`.
+    Each table is read once: its candidate columns (PK columns, FK children
+    and parents) melt into `(i, v)` rows, `i` the column's index and `v`
+    its value cast to bigint. One `groupBy(v)` then counts, per value, the
+    rows of each column that hold it (`c<i>`, a fixed-width buffer per
+    column, so partial aggregation merges a value before the exchange
+    whatever the number of columns holding it). A one-row aggregate over
+    those groups gives every test at once:
 
-    Returns `(pk, fk)` with `survey_pk_inference`'s and
-    `survey_fk_inference`'s columns. Ratios over zero rows or zero child
-    values are NULL, as SQL's division by zero is.
+    - a column's row count is the sum of its counts (the null group
+      included), its distinct count the non-null values it holds: the
+      exact PK test `distinct == rows > 0`;
+    - an FK pair's matched count is the non-null values that both the
+      child and the parent hold; the child is contained when that equals
+      the child's distinct count.
+
+    Nothing reads the values twice, so the plan has exactly one exchange
+    keyed by the value, the same value-keyed grouping as
+    `survey_fk_discovery`.
+
+    Returns one frame with a row per PK candidate (`parent_table` and
+    `parent_column` null) and per FK pair: `table_name`, `column_name`
+    (the child for a pair), `parent_table`, `parent_column`, `total_rows`,
+    `distinct_count`, `matched_distinct` and `is_key`. `pk_view` and
+    `fk_view` give the registry queries' columns. A caller that needs both
+    collects this one frame: two frames built on it would each plan their
+    own scan and shuffle.
     """
-    cols = list(
-        dict.fromkeys(
-            [(t, c) for t, c in pk_candidates]
-            + [(t, c) for ct, cc, pt, pc in fk_candidates for t, c in ((ct, cc), (pt, pc))]
-        )
-    )
+    cols = dict.fromkeys([*pk_candidates, *(tc for f in fk_candidates for tc in (f[:2], f[2:]))])
+    index = {tc: i for i, tc in enumerate(cols)}
     vals = reduce(
         DataFrame.unionByName,
         [
             frames[t].select(
-                F.lit(f"{t}.{c}").alias("col"), F.col(c).cast("bigint").alias("v")
+                F.inline(
+                    F.array(
+                        *[
+                            F.struct(F.lit(i).alias("i"), F.col(c).cast("bigint").alias("v"))
+                            for (tt, c), i in index.items()
+                            if tt == t
+                        ]
+                    )
+                )
             )
-            for t, c in cols
+            for t in dict.fromkeys(t for t, _ in cols)
         ],
     )
-    groups = vals.groupBy("col", "v").agg(F.count(F.lit(1)).alias("n"))
-    per_col = groups.groupBy("col").agg(
-        F.sum("n").cast("bigint").alias("n_rows"),
-        F.count("v").alias("n_distinct"),
+    per_value = vals.groupBy("v").agg(
+        *[F.count_if(F.col("i") == i).alias(f"c{i}") for i in range(len(cols))]
     )
 
-    pk = (
-        spark.createDataFrame(
-            [(t, c, f"{t}.{c}") for t, c in pk_candidates],
-            "table_name string, column_name string, col string",
+    def held(i: int):
+        return F.col("v").isNotNull() & (F.col(f"c{i}") > 0)
+
+    stats = per_value.agg(
+        *[F.coalesce(F.sum(f"c{i}"), F.lit(0)).alias(f"rows{i}") for i in range(len(cols))],
+        *[F.count_if(held(i)).alias(f"distinct{i}") for i in range(len(cols))],
+        *[
+            F.count_if(held(index[ct, cc]) & held(index[pt, pc])).alias(f"matched{k}")
+            for k, (ct, cc, pt, pc) in enumerate(fk_candidates)
+        ],
+    )
+
+    def key_row(t: str, c: str, pt: str | None = None, pc: str | None = None, matched=None):
+        n_rows, n_distinct = F.col(f"rows{index[t, c]}"), F.col(f"distinct{index[t, c]}")
+        if matched is None:  # a PK candidate
+            is_key, matched = (n_distinct == n_rows) & (n_rows > 0), F.lit(None)
+        else:
+            is_key = matched == n_distinct
+        return F.struct(
+            F.lit(t).alias("table_name"),
+            F.lit(c).alias("column_name"),
+            F.lit(pt).cast("string").alias("parent_table"),
+            F.lit(pc).cast("string").alias("parent_column"),
+            n_rows.alias("total_rows"),
+            n_distinct.alias("distinct_count"),
+            matched.cast("bigint").alias("matched_distinct"),
+            is_key.alias("is_key"),
         )
-        .join(per_col, "col", "left")
-        .select(
-            "table_name",
-            "column_name",
-            F.coalesce("n_rows", F.lit(0)).alias("total_rows"),
-            F.coalesce("n_distinct", F.lit(0)).alias("distinct_count"),
-        )
-        .select(
-            "*",
-            F.try_divide(F.col("distinct_count").cast("double"), F.col("total_rows"))
-            .alias("uniqueness_ratio"),
-            (
-                (F.col("distinct_count") == F.col("total_rows"))
-                & (F.col("total_rows") > 0)
-            ).alias("is_candidate_key"),
+
+    return stats.select(
+        F.inline(
+            F.array(
+                *[key_row(t, c) for t, c in pk_candidates],
+                *[
+                    key_row(ct, cc, pt, pc, F.col(f"matched{k}"))
+                    for k, (ct, cc, pt, pc) in enumerate(fk_candidates)
+                ],
+            )
         )
     )
 
-    pairs = spark.createDataFrame(
-        [(ct, cc, pt, pc, f"{ct}.{cc}", f"{pt}.{pc}") for ct, cc, pt, pc in fk_candidates],
-        "child_table string, child_column string, parent_table string, "
-        "parent_column string, child string, parent string",
+
+def pk_view(keys: DataFrame) -> DataFrame:
+    """`survey_pk_inference`'s columns from `key_inference`'s PK rows; the
+    uniqueness ratio over zero rows is NULL, as SQL's division by zero is."""
+    return keys.filter(F.col("parent_table").isNull()).select(
+        "table_name",
+        "column_name",
+        "total_rows",
+        "distinct_count",
+        F.try_divide(F.col("distinct_count").cast("double"), F.col("total_rows"))
+        .alias("uniqueness_ratio"),
+        F.col("is_key").alias("is_candidate_key"),
     )
-    distinct = groups.filter(F.col("v").isNotNull())
-    matched = (
-        distinct.select(F.col("col").alias("child"), "v")
-        .join(F.broadcast(pairs.select("child", "parent")), "child")
-        .join(
-            distinct.select(F.col("col").alias("parent"), "v"),
-            ["parent", "v"],
-            "left_semi",
-        )
-        .groupBy("child", "parent")
-        .agg(F.count(F.lit(1)).alias("n_matched"))
+
+
+def fk_view(keys: DataFrame) -> DataFrame:
+    """`survey_fk_inference`'s columns from `key_inference`'s FK rows; the
+    containment over zero child values is NULL."""
+    return keys.filter(F.col("parent_table").isNotNull()).select(
+        F.col("table_name").alias("child_table"),
+        F.col("column_name").alias("child_column"),
+        "parent_table",
+        "parent_column",
+        F.col("distinct_count").alias("child_distinct"),
+        "matched_distinct",
+        F.try_divide(F.col("matched_distinct").cast("double"), F.col("distinct_count"))
+        .alias("containment"),
+        F.col("is_key").alias("is_foreign_key"),
     )
-    fk = (
-        pairs.join(per_col.withColumnRenamed("col", "child"), "child", "left")
-        .join(matched, ["child", "parent"], "left")
-        .select(
-            "child_table",
-            "child_column",
-            "parent_table",
-            "parent_column",
-            F.coalesce("n_distinct", F.lit(0)).alias("child_distinct"),
-            F.coalesce("n_matched", F.lit(0)).alias("matched_distinct"),
-        )
-        .select(
-            "*",
-            F.try_divide(
-                F.col("matched_distinct").cast("double"), F.col("child_distinct")
-            ).alias("containment"),
-            (F.col("matched_distinct") == F.col("child_distinct"))
-            .alias("is_foreign_key"),
-        )
-    )
-    return pk, fk
 
 
 def _fk_sql() -> str:

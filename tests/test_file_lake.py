@@ -75,7 +75,7 @@ def test_schema_evolution_union_schema(spark, tmp_path):
         [(3, "c", 9.5)], "id bigint, name string, score double"
     ).coalesce(1).write.mode("append").parquet(str(tdir))
 
-    path, fmt = discover_tables(str(lake))["t"]
+    path, fmt = discover_tables(str(lake))[0]["t"]
     df = read_lake_table(spark, path, fmt)
     assert set(df.columns) == {"id", "name", "score"}
     # v1 rows surface with the evolved column null, not dropped

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import time
 from types import SimpleNamespace
@@ -325,6 +326,35 @@ def test_unreadable_tables_become_warnings(spark, tmp_path):
     warnings = doc["collection_metadata"]["warnings"]
     assert any(w.startswith("broken: collection failed:") for w in warnings), warnings
     assert any(w.startswith("garbage: collection failed:") for w in warnings), warnings
+    # one line naming the cause, not a Java stack trace
+    for w in warnings:
+        assert "\n" not in w and "\tat " not in w, w
+    (broken,) = [w for w in warnings if w.startswith("broken:")]
+    assert "not a Parquet file" in broken, broken
+
+
+def test_colliding_stems_and_mixed_directories_are_not_dropped(spark, tmp_path):
+    lake = tmp_path / "lake"
+    (lake / "mixed").mkdir(parents=True)
+    shutil.copyfile(table_path(SF_SMALL, "region"), lake / "region.parquet")
+    (lake / "region.csv").write_text("r_regionkey\n7\n")
+    (lake / "t.csv").write_text("a\n1\n2\n")
+    (lake / "t.jsonl").write_text('{"b": "x"}\n')
+    (lake / "mixed" / "part-0.csv").write_text("a\n1\n")
+    (lake / "mixed" / "part-1.jsonl").write_text('{"a": 1}\n')
+    out = tmp_path / "doc.json"
+    _cli_pipeline(lake, out)
+    doc = json.load(open(out))
+    tables = {t["name"]: t for t in doc["tables"]}
+    # every file is a table; the catalog-shaped region.parquet keeps its name
+    assert set(tables) == {"region", "region_csv", "t", "t_jsonl"}
+    assert tables["region"]["primary_key"]["columns"] == ["r_regionkey"]
+    assert (tables["t"]["row_count"], tables["t_jsonl"]["row_count"]) == (2, 1)
+    assert [c["name"] for c in tables["t_jsonl"]["columns"]] == ["b"]
+    warnings = doc["collection_metadata"]["warnings"]
+    assert "mixed: skipped, a directory mixing csv, jsonl files is not one table" in warnings
+    assert "t.jsonl: surveyed as table t_jsonl, since table t is t.csv" in warnings
+    assert "region.csv: surveyed as table region_csv, since table region is region.parquet" in warnings
 
 
 def test_directory_tables_take_the_catalog_path(spark, tmp_path):
@@ -339,6 +369,28 @@ def test_directory_tables_take_the_catalog_path(spark, tmp_path):
     assert tables["region"]["primary_key"]["columns"] == ["r_regionkey"]
     assert tables["nation"]["foreign_keys"][0]["referenced_table"] == "region"
     assert doc["database_info"]["size_bytes"] > 0
+
+
+# ------------------------------------------------------------ key kernel plan
+
+
+def test_key_inference_reads_the_values_once(spark):
+    """One scan of each table and one exchange of the candidate values feed
+    every PK and FK test; a ReusedExchange would count as the same one."""
+    frames = {t: spark.read.parquet(table_path(SF_SMALL, t)) for t in TABLES}
+    keys = profile.key_inference(frames, profile.PK_CANDIDATES, profile.FK_CANDIDATES)
+    rows = keys.collect()
+    assert len(rows) == len(profile.PK_CANDIDATES) + len(profile.FK_CANDIDATES)
+    plan = keys._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    exchanges = re.findall(r"(?<!Reused)Exchange hashpartitioning\(([^)]*)\)", final)
+    assert len(exchanges) == 1, final
+    assert re.fullmatch(r"v#\d+L?, \d+", exchanges[0]), exchanges
+    scans = re.findall(r"FileScan parquet .*?Location: InMemoryFileIndex\(1 paths\)\[([^\]]+)\]", final)
+    tables = {t for t, _ in profile.PK_CANDIDATES} | {
+        t for f in profile.FK_CANDIDATES for t in (f[0], f[2])
+    }
+    assert sorted(scans) == sorted(f"file:{table_path(SF_SMALL, t)}" for t in tables), scans
 
 
 # -------------------------------------------------------- throttle and jobs
