@@ -17,14 +17,17 @@ exposes the same verbs over the Spark-lake engine:
   python -m dbsurveyor_spark.cli validate <schema.json>
 
 Sources: a lake directory of parquet, csv or JSON-lines tables (the
-engine's native input), `sqlite:///path.db` (sources/sqlite.py), or
+engine's native input), `sqlite:///path.db` (sources/sqlite.py),
 `docs:/dir` — a document lake of `<collection>.jsonl` files surveyed via
 distributed variant-based schema inference (sources/documents.py, the
-MongoDB-adapter analog). JDBC URLs are accepted by `test` for URL/credential validation (a live server
-is needed to go further).
+MongoDB-adapter analog) — or a live server at `postgres://…` or
+`mysql://…` (sources/jdbc_collect.py; needs a JDBC driver jar and a
+reachable server). `test` also validates `jdbc:…` URLs and their
+credentials without connecting.
 Sampling fills the document's `samples` with reference-shaped TableSample
 entries (models.rs:399) — redacted per security.py's mode BEFORE the rows
 touch the document, matching the reference's redact-by-default posture.
+Every source's document is built by `survey/export.py`.
 """
 
 from __future__ import annotations
@@ -108,6 +111,28 @@ def cmd_collect(args: argparse.Namespace) -> int:
     if args.encrypt and args.compress:
         print("--encrypt and --compress are mutually exclusive", file=sys.stderr)
         return 2
+    cfg = None
+    if args.enable_quality:
+        from .survey.qualityconfig import (
+            AnomalyConfig,
+            AnomalySensitivity,
+            QualityConfig,
+        )
+
+        cfg = QualityConfig(
+            completeness_min=args.completeness_min,
+            uniqueness_min=args.uniqueness_min,
+            consistency_min=args.consistency_min,
+            anomaly_detection=AnomalyConfig(
+                enabled=not args.no_anomaly,
+                sensitivity=AnomalySensitivity(args.sensitivity),
+            ),
+        )
+        try:
+            cfg.validate()
+        except ValueError as exc:
+            print(f"invalid quality config: {exc}", file=sys.stderr)
+            return 2
     spark = _get_spark()
     databases_filtered = 0
     if args.all_databases:
@@ -144,12 +169,6 @@ def cmd_collect(args: argparse.Namespace) -> int:
         args = argparse.Namespace(**vars(args))
         args.database = list(kept.values())
     if args.database:
-        if args.sample or args.enable_quality:
-            print(
-                "warning: --sample/--enable-quality apply to single-lake "
-                "collect only; ignored for --database",
-                file=sys.stderr,
-            )
         # name by basename; identical paths dedupe, distinct paths with
         # colliding basenames get a numbered suffix so no requested lake
         # is ever silently dropped or double-surveyed
@@ -169,30 +188,11 @@ def cmd_collect(args: argparse.Namespace) -> int:
             infer_keys=not args.no_infer_keys,
             throttle_ms=args.throttle,
             databases_filtered=databases_filtered,
+            sample=args.sample or 0,
+            redact_mode=args.redact_mode,
+            quality=cfg,
         )
     elif _is_lake_dir(args.source):
-        cfg = None
-        if args.enable_quality:
-            from .survey.qualityconfig import (
-                AnomalyConfig,
-                AnomalySensitivity,
-                QualityConfig,
-            )
-
-            cfg = QualityConfig(
-                completeness_min=args.completeness_min,
-                uniqueness_min=args.uniqueness_min,
-                consistency_min=args.consistency_min,
-                anomaly_detection=AnomalyConfig(
-                    enabled=not args.no_anomaly,
-                    sensitivity=AnomalySensitivity(args.sensitivity),
-                ),
-            )
-            try:
-                cfg.validate()
-            except ValueError as exc:
-                print(f"invalid quality config: {exc}", file=sys.stderr)
-                return 2
         doc = collect_database_schema(
             spark,
             args.source,
@@ -232,15 +232,9 @@ def cmd_collect(args: argparse.Namespace) -> int:
         except ValueError as exc:
             print(f"bad docs source: {exc}", file=sys.stderr)
             return 2
-        spark = _get_spark()
-        doc = src.survey(spark, name=args.name, sample=args.sample or 0)
-        if doc["samples"]:
-            from .security import redact_rows
-
-            for s in doc["samples"]:
-                s["rows"] = redact_rows(
-                    [json.loads(r) for r in s["rows"]], mode=args.redact_mode
-                )
+        doc = src.survey(
+            spark, name=args.name, sample=args.sample or 0, redact_mode=args.redact_mode
+        )
     elif args.source.split("://", 1)[0] in (
         "postgres", "postgresql", "mysql", "mariadb"
     ):
@@ -251,10 +245,10 @@ def cmd_collect(args: argparse.Namespace) -> int:
         from .sources.jdbc import JdbcSource
         from .sources.jdbc_collect import collect_jdbc_schema
 
-        if args.sample or args.enable_quality:
+        if args.enable_quality:
             print(
-                "warning: --sample/--enable-quality apply to lake-dir "
-                "collect only; ignored for jdbc sources",
+                "warning: --enable-quality applies to lake-dir collect "
+                "only; ignored for jdbc sources",
                 file=sys.stderr,
             )
         src = JdbcSource(args.source)
@@ -268,6 +262,9 @@ def cmd_collect(args: argparse.Namespace) -> int:
                 lambda sql: src.read_query(spark, sql),
                 engine,
                 name=args.name or src.safe_url,
+                sample_size=args.sample or 0,
+                throttle_ms=args.throttle or 0,
+                redact_mode=args.redact_mode,
             )
         except Exception as exc:  # driver missing / unreachable server
             print(f"jdbc collect failed: {exc}", file=sys.stderr)

@@ -54,6 +54,7 @@ and one kernel (`survey_collections`) surveys every collection at once:
 
 from __future__ import annotations
 
+import json
 import logging
 import os
 from functools import reduce
@@ -382,10 +383,10 @@ def survey_collections(
 
     One entry per collection, in ``files`` order: ``name``, ``documents``,
     ``malformed`` (lines that are not JSON), ``schema`` (the inferred
-    schema) and ``sample`` (a TableSample-shaped dict, or None when
-    ``sample`` is 0). Three actions at most, whatever the number of
-    collections: the probe, the inference and, with ``sample``, the
-    samples.
+    schema), ``ordering_strategy`` and ``rows`` (up to ``sample`` parsed
+    documents in sample order, unredacted). Three actions at most,
+    whatever the number of collections: the probe, the inference and, with
+    ``sample``, the samples.
     """
     if not files:  # spark.read.text([]) raises
         return []
@@ -400,55 +401,37 @@ def survey_collections(
         docs, documents, max(c[2] for c in counts.values())
     )
     strategies = {name: detect_ordering_strategy(roots[name]) for name in files}
-    rows: dict[str, list[str]] = {name: [] for name in files}
+    rows: dict[str, list[dict]] = {name: [] for name in files}
     non_empty = {name: s for name, s in strategies.items() if documents[name]}
     if sample > 0 and non_empty:
         for r in _sample_frame(lines, non_empty, sample).collect():
-            rows[r[_COLL]].append(r["j"])
-    out = []
-    for name in files:
-        n, malformed, _ = counts[name]
-        out.append(
-            {
-                "name": name,
-                "documents": n,
-                "malformed": malformed,
-                "schema": schemas[name],
-                "sample": (
-                    _table_sample(name, strategies[name], rows[name], n, sample)
-                    if sample > 0
-                    else None
-                ),
-            }
-        )
-    return out
+            rows[r[_COLL]].append(json.loads(r["j"]))
+    return [
+        {
+            "name": name,
+            "documents": counts[name][0],
+            "malformed": counts[name][1],
+            "schema": schemas[name],
+            "ordering_strategy": strategies[name],
+            "rows": rows[name],
+        }
+        for name in files
+    ]
 
 
-def _table_sample(
-    name: str, strategy: Any, rows: list[str], total: int, sample_size: int
-) -> dict[str, Any]:
-    """`sampling.rs:137 sample_collection`'s TableSample shape."""
-    warnings = []
-    if len(rows) < sample_size:
-        warnings.append(
-            f"collection has only {len(rows)} documents, "
-            f"less than requested sample size of {sample_size}"
-        )
-    return {
-        "table_name": name,
-        "schema_name": None,
-        "sample_size": len(rows),
-        "total_rows": total,
-        "sampling_strategy": (
-            {"Random": {"limit": sample_size}}
-            if strategy == "Unordered"
-            else {"MostRecent": {"limit": sample_size}}
-        ),
-        "ordering_strategy": strategy,
-        "rows": rows,
-        "status": "Success",
-        "warnings": warnings,
-    }
+def _table_sample(c: dict[str, Any], limit: int, redact_mode: str) -> dict[str, Any]:
+    """`sampling.rs:137 sample_collection`'s TableSample of one surveyed
+    collection."""
+    from ..survey.export import table_sample
+
+    return table_sample(
+        c["name"],
+        c["rows"],
+        limit,
+        redact_mode,
+        total_rows=c["documents"],
+        ordering_strategy=c["ordering_strategy"],
+    )
 
 
 def inferred_to_columns(schema: dict[str, Any]) -> list[dict[str, Any]]:
@@ -561,7 +544,9 @@ class DocumentLakeSource:
     def sample_collection(
         self, spark: SparkSession, name: str, sample_size: int = 100
     ) -> dict[str, Any]:
-        """`sampling.rs:137 sample_collection` — TableSample-shaped dict.
+        """`sampling.rs:137 sample_collection` — one collection's
+        TableSample, its documents redacted under the default (balanced)
+        mode.
 
         Unordered collections take the deterministic md5-order random
         sample (portable, reproducible — where the reference's `$sample`
@@ -569,7 +554,7 @@ class DocumentLakeSource:
         don't have the problem).
         """
         (c,) = survey_collections(spark, self._one(name), sample=sample_size)
-        return c["sample"]
+        return _table_sample(c, sample_size, "balanced")
 
     # ------------------------------------------------------------- survey
 
@@ -579,69 +564,48 @@ class DocumentLakeSource:
         name: str | None = None,
         max_depth: int = 8,
         sample: int = 0,
+        redact_mode: str = "balanced",
     ) -> dict[str, Any]:
-        """Whole-lake schema document in the export shape (the analog of
-        `mod.rs:449`'s collect surface assembled into DatabaseSchema).
-        With ``sample`` > 0, ``samples`` holds up to that many documents of
-        each collection as JSON strings, unredacted."""
+        """Whole-lake schema document (the analog of `mod.rs:449`'s collect
+        surface), built by `survey.export.schema_document`. A collection
+        with an `_id` field has it as primary key. With ``sample`` > 0,
+        ``samples`` holds up to that many documents of each collection,
+        redacted under ``redact_mode``. Malformed lines are logged and
+        named in the warnings."""
         import time
-        from datetime import datetime, timezone
 
-        from ..security import detect_sensitive_columns
-        from ..survey.export import COLLECTOR, FORMAT_VERSION
+        from ..survey.export import schema_document, table_entry
 
         t_start = time.monotonic()
         files = self.collection_files()
         surveyed = survey_collections(spark, files, max_depth=max_depth, sample=sample)
-        tables = []
-        malformed = []
-        for c in surveyed:
-            pk = any(f["name"] == "_id" for f in c["schema"]["fields"])
-            tables.append(
-                {
-                    "name": c["name"],
-                    "schema": None,
-                    "columns": inferred_to_columns(c["schema"]),
-                    "primary_key": (
-                        {"name": None, "columns": ["_id"]} if pk else None
-                    ),
-                    "foreign_keys": [],
-                    "indexes": [],
-                    "constraints": [],
-                    "comment": None,
-                    "row_count": c["documents"],
-                }
+        tables = [
+            table_entry(
+                c["name"],
+                inferred_to_columns(c["schema"]),
+                ["_id"] if any(f["name"] == "_id" for f in c["schema"]["fields"]) else [],
+                [],
+                indexes=[],
+                row_count=c["documents"],
+                ordering_strategy=c["ordering_strategy"],
             )
-            if c["malformed"]:
-                n = c["malformed"]
-                malformed.append(
-                    f"{c['name']}: {n} malformed JSON line{'s' if n > 1 else ''} skipped"
-                )
+            for c in surveyed
+        ]
+        malformed = [
+            f"{c['name']}: {c['malformed']} malformed JSON "
+            f"line{'s' if c['malformed'] > 1 else ''} skipped"
+            for c in surveyed
+            if c["malformed"]
+        ]
         for w in malformed:
             log.warning(w)
-        return {
-            "format_version": FORMAT_VERSION,
-            "database_info": {
-                "name": name or os.path.basename(self.path.rstrip("/")),
-                "size_bytes": sum(os.path.getsize(f) for f in files.values()),
-                "access_level": "Full",
-                "collection_status": "Success",
-            },
-            "tables": tables,
-            "views": [],
-            "indexes": [],
-            "constraints": [],
-            "procedures": [],
-            "functions": [],
-            "triggers": [],
-            "custom_types": [],
-            "samples": [c["sample"] for c in surveyed] if sample > 0 else None,
-            "quality_metrics": None,
-            "collection_metadata": {
-                "collector_version": COLLECTOR,
-                "collected_at": datetime.now(timezone.utc).isoformat(),
-                "collection_duration_ms": int((time.monotonic() - t_start) * 1000),
-                # warn_sensitive pass (adapters/config/sampling.rs:44)
-                "warnings": detect_sensitive_columns(tables) + malformed,
-            },
-        }
+        return schema_document(
+            name or os.path.basename(self.path.rstrip("/")),
+            tables,
+            t_start,
+            size_bytes=sum(os.path.getsize(f) for f in files.values()),
+            samples=[_table_sample(c, sample, redact_mode) for c in surveyed]
+            if sample > 0
+            else None,
+            warnings=malformed,
+        )

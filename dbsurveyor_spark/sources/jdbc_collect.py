@@ -18,7 +18,6 @@ from typing import Any, Callable
 
 from pyspark.sql import DataFrame
 
-from ..security import detect_sensitive_columns
 from .catalog_sql import catalog_queries
 from .jdbc_sampling import collect_jdbc_samples
 from .ordering import relational_ordering_strategy
@@ -66,17 +65,18 @@ def collect_jdbc_schema(
     read_query: ReadQuery,
     engine: str,
     name: str = "jdbc",
-    warn_sensitive: bool = True,
     sample_size: int = 0,
     throttle_ms: int = 0,
+    redact_mode: str = "balanced",
 ) -> dict[str, Any]:
-    """Run the full catalog sweep and assemble the schema document.
-    ``sample_size > 0`` additionally pulls ordering-aware per-table samples
-    (jdbc_sampling.collect_jdbc_samples, throttled between tables)."""
+    """Run the full catalog sweep and assemble the schema document
+    (`survey.export.schema_document`/`table_entry`). ``sample_size > 0``
+    additionally pulls ordering-aware per-table samples
+    (jdbc_sampling.collect_jdbc_samples, throttled between tables), their
+    rows redacted under ``redact_mode``."""
     import time
-    from datetime import datetime, timezone
 
-    from ..survey.export import COLLECTOR, FORMAT_VERSION
+    from ..survey.export import schema_document, table_entry
 
     t_start = time.monotonic()
     qs = catalog_queries(engine)
@@ -147,50 +147,17 @@ def collect_jdbc_schema(
             }
             for c in cols_by_table.get(key, [])
         ]
-        tfks = list(fks.get(key, {}).values())
-        tixs = list(indexes.get(key, {}).values())
-        constraints = []
-        if pk:
-            constraints.append(
-                {
-                    "name": f"pk_{t['table_name']}",
-                    "table_name": t["table_name"],
-                    "schema": t["schema_name"],
-                    "constraint_type": "PrimaryKey",
-                    "columns": pk,
-                    "check_clause": None,
-                }
-            )
-        constraints += [
-            {
-                "name": fk["name"],
-                "table_name": t["table_name"],
-                "schema": t["schema_name"],
-                "constraint_type": "ForeignKey",
-                "columns": fk["columns"],
-                "check_clause": None,
-            }
-            for fk in tfks
-        ]
         tables.append(
-            {
-                "name": t["table_name"],
-                "schema": t["schema_name"],
-                "columns": columns,
-                "primary_key": (
-                    {"name": f"pk_{t['table_name']}", "columns": pk}
-                    if pk
-                    else None
-                ),
-                "foreign_keys": tfks,
-                "indexes": tixs,
-                "constraints": constraints,
-                "comment": None,
-                "row_count": t.get("approx_rows"),
-                "ordering_strategy": relational_ordering_strategy(
-                    columns, pk
-                ),
-            }
+            table_entry(
+                t["table_name"],
+                columns,
+                pk,
+                list(fks.get(key, {}).values()),
+                schema=t["schema_name"],
+                indexes=list(indexes.get(key, {}).values()),
+                row_count=t.get("approx_rows"),
+                ordering_strategy=relational_ordering_strategy(columns, pk),
+            )
         )
 
     views = [
@@ -236,43 +203,24 @@ def collect_jdbc_schema(
         for r in raw["triggers"]
     ]
 
-    return {
-        "format_version": FORMAT_VERSION,
-        "database_info": {
-            "name": name,
-            "version": None,
-            "size_bytes": None,
-            "encoding": None,
-            "is_system_database": False,
-            "access_level": "Full",
-            "collection_status": "Success",
-        },
-        "tables": tables,
-        "views": views,
-        "indexes": [ix for t in tables for ix in t["indexes"]],
-        "constraints": [c for t in tables for c in t["constraints"]],
-        "procedures": procedures,
-        "functions": functions,
-        "triggers": triggers,
-        "custom_types": [],
-        "samples": (
+    return schema_document(
+        name,
+        tables,
+        t_start,
+        views=views,
+        procedures=procedures,
+        functions=functions,
+        triggers=triggers,
+        samples=(
             collect_jdbc_samples(
                 read_query,
                 tables,
                 sample_size=sample_size,
                 throttle_ms=throttle_ms,
                 engine=engine,
+                redact_mode=redact_mode,
             )
             if sample_size > 0
             else None
         ),
-        "quality_metrics": None,
-        "collection_metadata": {
-            "collector_version": COLLECTOR,
-            "collected_at": datetime.now(timezone.utc).isoformat(),
-            "collection_duration_ms": int((time.monotonic() - t_start) * 1000),
-            "warnings": (
-                detect_sensitive_columns(tables) if warn_sensitive else []
-            ),
-        },
-    }
+    )

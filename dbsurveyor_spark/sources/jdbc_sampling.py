@@ -272,18 +272,14 @@ def sample_table(
     retries: int = DEFAULT_RETRIES,
     backoff_s: float = DEFAULT_BACKOFF_S,
     sleep: Callable[[float], None] = time.sleep,
+    redact_mode: str = "balanced",
 ) -> dict[str, Any]:
-    """One table's TableSample document (models.rs:399 shape)."""
-    from datetime import datetime, timezone
+    """One table's TableSample (`survey.export.table_sample`), its rows
+    redacted under ``redact_mode``."""
+    from ..survey.export import table_sample
 
     warnings: list[str] = []
-    monotone = bool(_strategy_key_columns(strategy))
-    sampling = (
-        {"MostRecent": {"limit": sample_size}}
-        if monotone
-        else {"Random": {"limit": sample_size}}
-    )
-    if not monotone:
+    if not _strategy_key_columns(strategy):
         warnings.append(
             f"table {table} has no reliable ordering; using random sampling"
         )
@@ -311,23 +307,17 @@ def sample_table(
         rows = []
         status = {"Skipped": {"reason": f"sampling failed: {e}"}}
         warnings.append(f"sampling {table} failed after {retries} retries")
-    if status == "Complete" and len(rows) < sample_size:
-        warnings.append(
-            f"table has only {len(rows)} rows, less than requested "
-            f"sample size of {sample_size}"
-        )
-    return {
-        "table_name": table,
-        "schema_name": schema,
-        "rows": rows,
-        "sample_size": len(rows),
-        "total_rows": total_rows,
-        "sampling_strategy": sampling,
-        "ordering_strategy": strategy,
-        "collected_at": datetime.now(timezone.utc).isoformat(),
-        "warnings": warnings,
-        "sample_status": status,
-    }
+    return table_sample(
+        table,
+        rows,
+        sample_size,
+        redact_mode,
+        schema=schema,
+        total_rows=total_rows,
+        ordering_strategy=strategy,
+        status=status,
+        warnings=warnings,
+    )
 
 
 def collect_jdbc_samples(
@@ -339,13 +329,14 @@ def collect_jdbc_samples(
     retries: int = DEFAULT_RETRIES,
     backoff_s: float = DEFAULT_BACKOFF_S,
     sleep: Callable[[float], None] = time.sleep,
+    redact_mode: str = "balanced",
 ) -> list[dict[str, Any]]:
     """Samples for every table of a collected document (the reference's
     per-table sample loop with throttle_ms rate limiting between tables —
-    config/sampling.rs SamplingConfig). ``tables`` are document-shaped
-    dicts from `collect_jdbc_schema`, whose recorded ordering_strategy is
-    reused instead of re-querying the catalog (the reference's
-    sample_table_with_columns optimization)."""
+    config/sampling.rs SamplingConfig), redacted under ``redact_mode``.
+    ``tables`` are document-shaped dicts from `collect_jdbc_schema`, whose
+    recorded ordering_strategy is reused instead of re-querying the
+    catalog (the reference's sample_table_with_columns optimization)."""
     out = []
     for i, t in enumerate(tables):
         if i and throttle_ms:
@@ -362,6 +353,7 @@ def collect_jdbc_samples(
                 retries=retries,
                 backoff_s=backoff_s,
                 sleep=sleep,
+                redact_mode=redact_mode,
             )
         )
     return out

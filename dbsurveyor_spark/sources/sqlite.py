@@ -6,14 +6,11 @@ Parity: `dbsurveyor-core/src/adapters/sqlite/*` — schema collection via
 metadata via `PRAGMA page_count/page_size/encoding` (connection.rs:119-133),
 and sampling.
 
-SQLite files are single-writer local artifacts — inherently driver-side.
-The pattern for scale: read each .db's table through stdlib `sqlite3` into
-Arrow batches, hand the batches to Spark via `createDataFrame`, and from
-then on everything (profiling, quality, dedup) is distributed. For MANY
-sqlite files (the realistic 100 TB shape: millions of shards), parallelize
-per-file on executors instead — `mapInPandas` over a DataFrame of file
-paths would open each shard locally on the executor; that variant needs the
-.db files on shared storage.
+This module reads metadata only, on the driver through stdlib `sqlite3`.
+Rows reach Spark through `sources/sqlite_scale.py`: `read_table_partitioned`
+range-scans one table by rowid on the executors, and `read_shards` scans
+MANY .db files (the 100 TB shape: millions of shards on shared storage),
+each opened on the executor that owns its path.
 """
 
 from __future__ import annotations
@@ -21,8 +18,6 @@ from __future__ import annotations
 import contextlib
 import sqlite3
 from typing import Any
-
-from pyspark.sql import DataFrame, SparkSession
 
 from .ordering import relational_ordering_strategy
 
@@ -89,7 +84,10 @@ class SqliteSource:
         return [r[0] for r in rows]
 
     def collect_table_schema(self, table: str) -> dict[str, Any]:
-        """Columns, PK, FKs, indexes for one table (schema_collection.rs)."""
+        """Columns, PK, FKs, indexes for one table (schema_collection.rs),
+        as a `survey.export.table_entry`."""
+        from ..survey.export import table_entry
+
         with contextlib.closing(self._connect()) as con:
             cols = con.execute(f"PRAGMA table_info({_q(table)})").fetchall()
             fks = con.execute(f"PRAGMA foreign_key_list({_q(table)})").fetchall()
@@ -165,118 +163,43 @@ class SqliteSource:
             }
             for idx in idxs
         ]
-        constraints = []
-        if pk_cols:
-            constraints.append(
-                {
-                    "name": f"pk_{table}",
-                    "table_name": table,
-                    "schema": None,
-                    "constraint_type": "PrimaryKey",
-                    "columns": pk_cols,
-                    "check_clause": None,
-                }
-            )
-        constraints += [
-            {
-                "name": fk["name"],
-                "table_name": table,
-                "schema": None,
-                "constraint_type": "ForeignKey",
-                "columns": fk["columns"],
-                "check_clause": None,
-            }
-            for fk in foreign_keys
-        ]
-        return {
-            "name": table,
-            "schema": None,
-            "columns": columns,
-            "primary_key": {"name": None, "columns": pk_cols} if pk_cols else None,
-            "foreign_keys": foreign_keys,
-            "indexes": indexes,
-            "constraints": constraints,
-            "comment": None,
-            "row_count": self.row_count(table),
-            "ordering_strategy": relational_ordering_strategy(
+        return table_entry(
+            table,
+            columns,
+            pk_cols,
+            foreign_keys,
+            indexes=indexes,
+            row_count=self.row_count(table),
+            ordering_strategy=relational_ordering_strategy(
                 columns, pk_cols, has_rowid=has_rowid
             ),
-        }
+        )
 
     def row_count(self, table: str) -> int:
         with contextlib.closing(self._connect()) as con:
             return con.execute(f"SELECT COUNT(*) FROM {_q(table)}").fetchone()[0]
 
-    def read_table(
-        self, spark: SparkSession, table: str, batch_size: int = 50_000
-    ) -> DataFrame:
-        """Table → Spark DataFrame via Arrow batches.
-
-        Column names/order come from the cursor description; Arrow infers
-        types per batch and Spark unions them — fine for SQLite's loose
-        typing. Driver-memory-bound by design (one shard); see module
-        docstring for the many-shards pattern.
-        """
-        import pyarrow as pa
-
-        with contextlib.closing(self._connect()) as con:
-            cur = con.execute(f"SELECT * FROM {_q(table)}")
-            names = [d[0] for d in cur.description]
-            columns: list[list] = [[] for _ in names]
-            while True:
-                rows = cur.fetchmany(batch_size)
-                if not rows:
-                    break
-                for r in rows:
-                    for i, v in enumerate(r):
-                        columns[i].append(v)
-        if not any(columns):
-            return spark.createDataFrame([], schema=", ".join(f"{n} string" for n in names))
-        # one Arrow inference pass over each WHOLE column — per-batch
-        # inference would give an all-NULL batch a null type that clashes
-        # with the typed batches and fail Table.from_batches
-        tbl = pa.Table.from_arrays([pa.array(c) for c in columns], names=names)
-        return spark.createDataFrame(tbl.to_pandas())
-
     def survey(self, name: str | None = None) -> dict[str, Any]:
-        """Full-file schema document in the export shape (DatabaseSchema);
-        per-table PRAGMA index/constraint data flows into the top-level
-        registries like the reference document."""
+        """Full-file schema document (DatabaseSchema, built by
+        `survey.export.schema_document`); the per-table PRAGMA index and
+        constraint data flows into the top-level registries like the
+        reference document. Metadata only: no samples or quality metrics."""
         import time
-        from datetime import datetime, timezone
 
-        from ..security import detect_sensitive_columns
-        from ..survey.export import COLLECTOR, FORMAT_VERSION
+        from ..survey.export import schema_document
 
         t_start = time.monotonic()
         info = self.database_info()
         tables = [self.collect_table_schema(t) for t in self.table_names()]
-        return {
-            "format_version": FORMAT_VERSION,
-            "database_info": {
-                **info,
-                "name": name or info["name"],
-                "access_level": "Full",
-                "collection_status": "Success",
-            },
-            "tables": tables,
-            "views": self._views(),
-            "indexes": [ix for t in tables for ix in t["indexes"]],
-            "constraints": [c for t in tables for c in t["constraints"]],
-            "procedures": [],
-            "functions": [],
-            "triggers": self._triggers(),
-            "custom_types": [],
-            "samples": None,
-            "quality_metrics": None,
-            "collection_metadata": {
-                "collector_version": COLLECTOR,
-                "collected_at": datetime.now(timezone.utc).isoformat(),
-                "collection_duration_ms": int((time.monotonic() - t_start) * 1000),
-                # warn_sensitive pass (adapters/config/sampling.rs:44)
-                "warnings": detect_sensitive_columns(tables),
-            },
-        }
+        return schema_document(
+            name or info["name"],
+            tables,
+            t_start,
+            size_bytes=info["size_bytes"],
+            encoding=info["encoding"],
+            views=self._views(),
+            triggers=self._triggers(),
+        )
 
     def _views(self) -> list[dict[str, Any]]:
         with contextlib.closing(self._connect()) as con:

@@ -23,13 +23,14 @@ from __future__ import annotations
 
 import json
 import os
+import time
 from datetime import datetime, timezone
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from ..security import detect_sensitive_columns
+from ..security import detect_sensitive_columns, redact_rows
 from ..sources.file_lake import discover_tables
 from .lakescan import survey_lake
 from .qualityconfig import QualityConfig
@@ -66,56 +67,198 @@ def _sql_type(dt: T.DataType) -> str:
     return dt.simpleString().upper()
 
 
+def schema_document(
+    name: str,
+    tables: list[dict[str, Any]],
+    started: float,
+    *,
+    size_bytes: int | None = None,
+    encoding: str | None = None,
+    views: list[dict[str, Any]] | None = None,
+    procedures: list[dict[str, Any]] | None = None,
+    functions: list[dict[str, Any]] | None = None,
+    triggers: list[dict[str, Any]] | None = None,
+    samples: list[dict[str, Any]] | None = None,
+    quality_metrics: list[dict[str, Any]] | None = None,
+    warnings: list[str] | None = None,
+) -> dict[str, Any]:
+    """The portable DatabaseSchema document (models.rs:431) every collector
+    emits. The top-level ``indexes``/``constraints`` registries are the
+    flattened per-table entries, as in the reference document; ``started``
+    is the collect's `time.monotonic()` start. The collection warnings are
+    the source's ``warnings`` followed by the sensitive-column pass over the
+    collected column names (adapters/config/sampling.rs:44 warn_sensitive).
+    """
+    return {
+        "format_version": FORMAT_VERSION,
+        "database_info": {
+            "name": name,
+            "version": None,
+            "size_bytes": size_bytes,
+            "encoding": encoding,
+            "is_system_database": False,
+            "access_level": "Full",
+            "collection_status": "Success",
+        },
+        "tables": tables,
+        "views": views or [],
+        "indexes": [ix for t in tables for ix in t["indexes"]],
+        "constraints": [c for t in tables for c in t["constraints"]],
+        "procedures": procedures or [],
+        "functions": functions or [],
+        "triggers": triggers or [],
+        "custom_types": [],
+        "samples": samples,
+        "quality_metrics": quality_metrics,
+        "collection_metadata": {
+            "collector_version": COLLECTOR,
+            "collected_at": datetime.now(timezone.utc).isoformat(),
+            "collection_duration_ms": int((time.monotonic() - started) * 1000),
+            "warnings": (warnings or []) + detect_sensitive_columns(tables),
+        },
+    }
+
+
+def table_entry(
+    name: str,
+    columns: list[dict[str, Any]],
+    pk_columns: list[str],
+    foreign_keys: list[dict[str, Any]],
+    *,
+    schema: str | None = None,
+    indexes: list[dict[str, Any]] | None = None,
+    row_count: int | None = None,
+    comment: str | None = None,
+    ordering_strategy: Any = None,
+) -> dict[str, Any]:
+    """One Table of the document (models.rs Table). The PrimaryKey and
+    ForeignKey constraints (models.rs:156) are derived from ``pk_columns``
+    and ``foreign_keys``. ``indexes`` are the table's physical indexes;
+    None means the source has none (a lake table), and then the primary
+    key gets the unique index it logically is (models.rs:133)."""
+    if indexes is None:
+        indexes = []
+        if pk_columns:
+            indexes.append(
+                {
+                    "name": f"pk_{name}_idx",
+                    "table_name": name,
+                    "schema": schema,
+                    "columns": [{"name": c, "sort_order": "Ascending"} for c in pk_columns],
+                    "is_unique": True,
+                    "is_primary": True,
+                    "index_type": None,
+                }
+            )
+    keys = [(f"pk_{name}", "PrimaryKey", pk_columns)] if pk_columns else []
+    keys += [(fk["name"], "ForeignKey", fk["columns"]) for fk in foreign_keys]
+    return {
+        "name": name,
+        "schema": schema,
+        "columns": columns,
+        "primary_key": {"name": f"pk_{name}", "columns": pk_columns} if pk_columns else None,
+        "foreign_keys": foreign_keys,
+        "indexes": indexes,
+        "constraints": [
+            {
+                "name": key_name,
+                "table_name": name,
+                "schema": schema,
+                "constraint_type": kind,
+                "columns": cols,
+                "check_clause": None,
+            }
+            for key_name, kind, cols in keys
+        ],
+        "comment": comment,
+        "row_count": row_count,
+        "ordering_strategy": ordering_strategy,
+    }
+
+
+def table_sample(
+    table: str,
+    rows: list[dict[str, Any]],
+    limit: int,
+    redact_mode: str,
+    *,
+    schema: str | None = None,
+    total_rows: int | None = None,
+    ordering_strategy: Any = None,
+    status: Any = "Complete",
+    warnings: list[str] | None = None,
+) -> dict[str, Any]:
+    """One TableSample (models.rs:399) of a sample of up to ``limit`` rows.
+
+    The rows are redacted under ``redact_mode`` (security.py) before they
+    enter the document. An ``Unordered`` table is sampled at random; any
+    other ordering, or none known (a lake table's head by its first
+    column), is MostRecent. A complete sample shorter than ``limit`` gets a
+    warning after the source's own ``warnings``.
+    """
+    warnings = list(warnings or [])
+    if status == "Complete" and len(rows) < limit:
+        warnings.append(
+            f"table has only {len(rows)} rows, less than requested sample size of {limit}"
+        )
+    strategy = "Random" if ordering_strategy == "Unordered" else "MostRecent"
+    return {
+        "table_name": table,
+        "schema_name": schema,
+        "rows": redact_rows(rows, redact_mode),
+        "sample_size": len(rows),
+        "total_rows": total_rows,
+        "sampling_strategy": {strategy: {"limit": limit}},
+        "ordering_strategy": ordering_strategy,
+        "collected_at": datetime.now(timezone.utc).isoformat(),
+        "warnings": warnings,
+        "sample_status": status,
+    }
+
+
 def collect_database_schema(
     spark: SparkSession,
     lake_dir: str,
     name: str = "testdata",
     infer_keys: bool = True,
-    warn_sensitive: bool = True,
     *,
     sample: int = 0,
     redact_mode: str = "balanced",
     quality: QualityConfig | None = None,
     throttle_ms: int | None = None,
 ) -> dict[str, Any]:
-    """Build the portable schema document for every table of a file lake:
-    any directory of parquet, csv or JSON-lines tables
+    """Build the schema document for every table of a file lake: any
+    directory of parquet, csv or JSON-lines tables
     (`sources/file_lake.discover_tables`).
 
     The whole document comes from ONE scan of the lake
     (`lakescan.survey_lake`): each table is loaded once, one packed
     aggregate gives every row count (and quality pass 1), one value
     shuffle tests every PK/FK candidate when `infer_keys`, one more
-    aggregate counts quality pass 2's outliers, and `sample` > 0 fills
-    `samples` with redacted heads — about 55 Spark jobs for the catalog's
-    ten tables, however many facts the document records. Key candidates
-    are the catalog's hints, applied to whichever hinted tables and
-    columns the lake holds; other tables get no keys. Inferred keys also
-    materialize as index/constraint entries (models.rs:133 Index,
-    models.rs:156 Constraint shapes): a lake table has no physical b-tree,
-    but the inferred unique key IS the logical index a reader of the
-    document needs. Each table's `comment` records its storage format; a
+    aggregate counts quality pass 2's outliers, and `sample` > 0 takes the
+    head of each table — about 55 Spark jobs for the catalog's ten tables,
+    however many facts the document records. Key candidates are the
+    catalog's hints, applied to whichever hinted tables and columns the
+    lake holds; other tables get no keys. `schema_document`,
+    `table_entry` and `table_sample` shape the result: an inferred key
+    also gets its index and constraint entries, and the samples are
+    redacted under `redact_mode` with the table's row count as
+    `total_rows`. Each table's `comment` records its storage format; a
     table that fails to load, a mixed-format subdirectory and a renamed
     table whose stem another file holds are named in the warnings.
     """
-    import time
-
     t_start = time.monotonic()
     scan = survey_lake(
         spark,
         lake_dir,
         infer_keys=infer_keys,
         sample=sample,
-        redact_mode=redact_mode,
         quality=quality,
         throttle_ms=throttle_ms,
     )
-    pk_by_table = scan.primary_keys
-    fks_by_table = scan.foreign_keys
-
     tables = []
     for tname, df in scan.frames.items():
-        pk_cols = pk_by_table.get(tname, [])
+        pk_cols = scan.primary_keys.get(tname, [])
         columns = [
             {
                 "name": f.name,
@@ -129,96 +272,32 @@ def collect_database_schema(
             }
             for i, f in enumerate(df.schema.fields)
         ]
-        fks = fks_by_table.get(tname, [])
-        indexes = (
-            [
-                {
-                    "name": f"pk_{tname}_idx",
-                    "table_name": tname,
-                    "schema": None,
-                    "columns": [
-                        {"name": c, "sort_order": "Ascending"} for c in pk_cols
-                    ],
-                    "is_unique": True,
-                    "is_primary": True,
-                    "index_type": None,
-                }
-            ]
-            if pk_cols
-            else []
-        )
-        constraints = []
-        if pk_cols:
-            constraints.append(
-                {
-                    "name": f"pk_{tname}",
-                    "table_name": tname,
-                    "schema": None,
-                    "constraint_type": "PrimaryKey",
-                    "columns": pk_cols,
-                    "check_clause": None,
-                }
-            )
-        constraints += [
-            {
-                "name": fk["name"],
-                "table_name": tname,
-                "schema": None,
-                "constraint_type": "ForeignKey",
-                "columns": fk["columns"],
-                "check_clause": None,
-            }
-            for fk in fks
-        ]
         tables.append(
-            {
-                "name": tname,
-                "schema": None,
-                "columns": columns,
-                "primary_key": (
-                    {"name": f"pk_{tname}", "columns": pk_cols} if pk_cols else None
-                ),
-                "foreign_keys": fks,
-                "indexes": indexes,
-                "constraints": constraints,
-                "comment": f"format={scan.sources[tname][1]}",
-                "row_count": scan.row_counts[tname],
-            }
+            table_entry(
+                tname,
+                columns,
+                pk_cols,
+                scan.foreign_keys.get(tname, []),
+                row_count=scan.row_counts[tname],
+                comment=f"format={scan.sources[tname][1]}",
+            )
         )
-
-    return {
-        "format_version": FORMAT_VERSION,
-        "database_info": {
-            "name": name,
-            "version": None,
-            "size_bytes": _lake_size([path for path, _ in scan.sources.values()]),
-            "encoding": "UTF-8",
-            "is_system_database": False,
-            "access_level": "Full",
-            "collection_status": "Success",
-        },
-        "tables": tables,
-        "views": [],
-        # top-level registries are the flattened per-table entries
-        # (DatabaseSchema keeps both views, like the reference document)
-        "indexes": [ix for t in tables for ix in t["indexes"]],
-        "constraints": [c for t in tables for c in t["constraints"]],
-        "procedures": [],
-        "functions": [],
-        "triggers": [],
-        "custom_types": [],
-        "samples": scan.samples,
-        "quality_metrics": scan.quality_metrics,
-        "collection_metadata": {
-            "collector_version": COLLECTOR,
-            "collected_at": datetime.now(timezone.utc).isoformat(),
-            "collection_duration_ms": int((time.monotonic() - t_start) * 1000),
-            # warn_sensitive pass over collected column names
-            # (adapters/config/sampling.rs:44 SamplingConfig.warn_sensitive)
-            "warnings": scan.warnings
-            + (detect_sensitive_columns(tables) if warn_sensitive else []),
-        },
-    }
+    samples = None
+    if scan.samples is not None:
+        samples = [
+            table_sample(t, rows, sample, redact_mode, total_rows=scan.row_counts[t])
+            for t, rows in scan.samples.items()
+        ]
+    return schema_document(
+        name,
+        tables,
+        t_start,
+        size_bytes=_lake_size([path for path, _ in scan.sources.values()]),
+        encoding="UTF-8",
+        samples=samples,
+        quality_metrics=scan.quality_metrics,
+        warnings=scan.warnings,
+    )
 
 
 def enumerate_lake_databases(
@@ -266,18 +345,21 @@ def collect_multi_database_schema(
     infer_keys: bool = True,
     throttle_ms: int | None = None,
     databases_filtered: int = 0,
+    *,
+    sample: int = 0,
+    redact_mode: str = "balanced",
+    quality: QualityConfig | None = None,
 ) -> dict[str, Any]:
     """Survey MANY datasets (sf_dirs) in one run — the lake analog of the
     reference's server-wide multi-database collection
     (`adapters/postgres/multi_database.rs:167 MultiDatabaseResult`,
     `:107 DatabaseCollectionResult`, `:133 MultiDatabaseMetadata`).
 
-    ``datasets`` maps database-name → dataset directory. Failures are
-    recorded (not raised) when ``continue_on_error``, matching the
-    reference's config default.
+    ``datasets`` maps database-name → dataset directory; each database is
+    collected by `collect_database_schema` with ``sample``,
+    ``redact_mode`` and ``quality``. Failures are recorded (not raised)
+    when ``continue_on_error``, matching the reference's config default.
     """
-    import time
-
     started = datetime.now(timezone.utc)
     t0 = time.monotonic()
     results: list[dict[str, Any]] = []
@@ -295,6 +377,9 @@ def collect_multi_database_schema(
                 sf_dir,
                 name=db_name,
                 infer_keys=infer_keys,
+                sample=sample,
+                redact_mode=redact_mode,
+                quality=quality,
                 throttle_ms=throttle_ms,
             )
             results.append(

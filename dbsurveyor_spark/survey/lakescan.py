@@ -23,7 +23,8 @@ whole survey:
    present (`profile.key_inference`), collected as one frame;
 4. pass 2 — one action: the outlier counts of every table, packed likewise;
 5. samples — the `orderBy(desc(first column)).limit(n)` head of each
-   frame, from the same pool, redacted before it enters the document.
+   frame, from the same pool (`export.table_sample` redacts them before
+   they enter the document).
 
 Steps 2 and 4, step 3 and step 5 do not depend on each other and run side
 by side. The ten-table catalog lake takes about 55 Spark jobs in all (AQE
@@ -42,7 +43,6 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass
-from datetime import datetime, timezone
 from functools import reduce
 from typing import Any
 
@@ -51,7 +51,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType
 
 from ..catalog import TABLES, load_table
-from ..security import redact_rows
 from ..sources.file_lake import discover_tables, read_lake_table
 from .profile import FK_CANDIDATES, PK_CANDIDATES, key_inference, pool_map
 from .quality import (
@@ -92,11 +91,10 @@ def sample_tables(
     spark: SparkSession,
     frames: dict[str, DataFrame],
     limit: int,
-    mode: str,
     throttle_ms: int | None = None,
-) -> list[dict]:
-    """Reference-shaped TableSample list (models.rs:399): deterministic
-    head-by-first-column rows, redacted before entering the document."""
+) -> dict[str, list[dict]]:
+    """Table → its deterministic head: up to ``limit`` rows ordered by the
+    first column, descending."""
 
     def head(tname: str) -> list[dict]:
         df = frames[tname]
@@ -107,21 +105,7 @@ def sample_tables(
             for r in df.orderBy(F.desc(df.columns[0])).limit(limit).collect()
         ]
 
-    heads = pool_map(spark, head, list(frames), throttle_ms)
-    return [
-        {
-            "table_name": tname,
-            "schema_name": None,
-            "rows": redact_rows(rows, mode) if mode != "none" else rows,
-            "sample_size": len(rows),
-            "total_rows": None,
-            "sampling_strategy": {"MostRecent": {"limit": limit}},
-            "collected_at": datetime.now(timezone.utc).isoformat(),
-            "warnings": [],
-            "sample_status": "Complete",
-        }
-        for tname, rows in zip(frames, heads)
-    ]
+    return dict(zip(frames, pool_map(spark, head, list(frames), throttle_ms)))
 
 
 def _row_counts_and_quality(
@@ -244,7 +228,7 @@ class LakeSurvey:
     row_counts: dict[str, int]
     primary_keys: dict[str, list[str]]
     foreign_keys: dict[str, list[dict[str, Any]]]
-    samples: list[dict] | None
+    samples: dict[str, list[dict]] | None  # table → sampled rows, unredacted
     quality_metrics: list[dict] | None
     warnings: list[str]
 
@@ -256,7 +240,6 @@ def survey_lake(
     *,
     infer_keys: bool = True,
     sample: int = 0,
-    redact_mode: str = "balanced",
     quality: QualityConfig | None = None,
     rsd: float = 0.02,
     z_threshold: float | None = None,
@@ -270,7 +253,7 @@ def survey_lake(
     out and named in ``warnings``, as are the entries `discover_tables`
     skips or renames. ``infer_keys`` runs the catalog's PK/FK
     candidates whose tables and columns are in the scan; ``sample`` > 0
-    takes that many rows per table; ``quality`` adds the
+    takes that many rows per table, unredacted; ``quality`` adds the
     TableQualityMetrics list.
 
     After the loads, the passes, the key shuffle and the samples do not
@@ -306,7 +289,7 @@ def survey_lake(
     if infer_keys:
         tasks.append(lambda: _infer_keys(frames))
     if sample:
-        tasks.append(lambda: sample_tables(spark, frames, sample, redact_mode, throttle_ms))
+        tasks.append(lambda: sample_tables(spark, frames, sample, throttle_ms))
     results = pool_map(spark, lambda task: task(), tasks, throttle_ms)
     row_counts, metrics = results.pop(0)
     primary_keys, foreign_keys = results.pop(0) if infer_keys else ({}, {})

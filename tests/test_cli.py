@@ -77,6 +77,36 @@ class TestCollect:
         ]
         assert doc["collection_metadata"]["databases_failed"] == 0
 
+    def test_fleet_collect_samples_and_analyzes_every_database(self, spark, tmp_path):
+        import shutil
+
+        lakes = []
+        for name in ("a", "b"):
+            d = tmp_path / name
+            d.mkdir()
+            for t in ("region", "nation"):
+                shutil.copy(f"{SF}/{t}.parquet", d / f"{t}.parquet")
+            lakes += ["--database", str(d)]
+        out = tmp_path / "fleet.json"
+        assert (
+            run(
+                ["collect", "x", *lakes, "--sample", "2", "--enable-quality",
+                 "--redact-mode", "conservative", "-o", str(out)]
+            )
+            == 0
+        )
+        docs = [d["schema"] for d in json.load(open(out))["databases"]]
+        assert len(docs) == 2
+        for doc in docs:
+            assert [s["sample_size"] for s in doc["samples"]] == [2, 2]
+            # the redact mode reaches every database: balanced would keep
+            # EUROPE, conservative redacts it (it does not look like a time)
+            assert [r["r_name"] for r in doc["samples"][0]["rows"]] == [
+                "MIDDLE EAST",
+                "[REDACTED]",
+            ]
+            assert [m["table_name"] for m in doc["quality_metrics"]] == ["region", "nation"]
+
     @pytest.fixture()
     def server_root(self, tmp_path):
         """A lake 'server': two real databases, one system dir, one to

@@ -202,7 +202,7 @@ def test_sample_most_recent(spark, lake):
         "Timestamp": {"column": "createdAt", "direction": "Descending"}
     }
     # newest-first by createdAt
-    names = [json.loads(r)["name"] for r in s["rows"]]
+    names = [r["name"] for r in s["rows"]]
     assert names == ["Jane", "John"]
     assert s["total_rows"] == 3 and s["sample_size"] == 2
 
@@ -236,7 +236,7 @@ def test_survey_document_validates(spark, lake):
         "unordered",
     }
     users = next(t for t in doc["tables"] if t["name"] == "users")
-    assert users["primary_key"] == {"name": None, "columns": ["_id"]}
+    assert users["primary_key"] == {"name": "pk_users", "columns": ["_id"]}
     assert users["row_count"] == 3
     unord = next(t for t in doc["tables"] if t["name"] == "unordered")
     assert unord["primary_key"] is None

@@ -82,7 +82,7 @@ def test_schema_evolution_union_schema(spark, tmp_path):
     rows = {r.id: r for r in df.collect()}
     assert rows[1].score is None and rows[3].score == 9.5
 
-    doc = collect_database_schema(spark, str(lake), warn_sensitive=False)
+    doc = collect_database_schema(spark, str(lake))
     cols = {c["name"]: c for c in doc["tables"][0]["columns"]}
     assert "score" in cols and cols["score"]["is_nullable"]
     assert doc["tables"][0]["row_count"] == 3

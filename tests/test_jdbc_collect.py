@@ -307,3 +307,28 @@ class TestCollectWithSamples:
         assert any(
             "less than requested" in w for w in samples["orders"]["warnings"]
         )
+
+    def test_sample_rows_are_redacted(self, spark):
+        base = _stub_reader(spark)
+
+        def reader(sql):
+            if sql.startswith("SELECT * FROM"):
+                return spark.createDataFrame(
+                    [(2, "b@x.com"), (1, None)], "id long, email string"
+                )
+            return base(sql)
+
+        def users_rows(**kwargs):
+            doc = collect_jdbc_schema(reader, "postgresql", sample_size=2, **kwargs)
+            (s,) = [s for s in doc["samples"] if s["table_name"] == "users"]
+            return s["rows"]
+
+        # balanced is the default mode, as for lake samples
+        assert users_rows() == [
+            {"id": 2, "email": "[REDACTED]"},
+            {"id": 1, "email": None},
+        ]
+        assert users_rows(redact_mode="none") == [
+            {"id": 2, "email": "b@x.com"},
+            {"id": 1, "email": None},
+        ]

@@ -92,20 +92,20 @@ class TestSaltedJoinRestrictions:
 
 class TestSqliteNullBatches:
     def test_all_null_column_in_one_batch(self, spark, tmp_path):
-        from dbsurveyor_spark.sources.sqlite import SqliteSource
+        from dbsurveyor_spark.sources.sqlite_scale import read_table_partitioned
 
         path = tmp_path / "nulls.db"
         con = sqlite3.connect(path)
         con.execute("CREATE TABLE t (id INTEGER, maybe TEXT)")
         # first 5 rows all-NULL in `maybe`, typed values later — with
-        # per-batch Arrow inference (batch_size=5) this used to raise
+        # per-batch Arrow type inference a batch of 5 used to raise
         con.executemany(
             "INSERT INTO t VALUES (?, ?)",
             [(i, None) for i in range(5)] + [(i, f"v{i}") for i in range(5, 10)],
         )
         con.commit()
         con.close()
-        df = SqliteSource(str(path)).read_table(spark, "t", batch_size=5)
+        df = read_table_partitioned(spark, str(path), "t", num_partitions=1, batch_rows=5)
         rows = {r.id: r.maybe for r in df.collect()}
         assert rows[0] is None and rows[7] == "v7"
         assert len(rows) == 10

@@ -347,7 +347,3 @@ class TestSensitiveColumnDetection:
         )
         # the TPC-H-ish lake has no sensitive column names
         assert doc["collection_metadata"]["warnings"] == []
-        doc2 = collect_database_schema(
-            spark, "/root/testdata/sf0.001", infer_keys=False, warn_sensitive=False
-        )
-        assert doc2["collection_metadata"]["warnings"] == []

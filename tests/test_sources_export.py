@@ -85,7 +85,9 @@ class TestSqliteSource:
         assert info["encoding"] == "UTF-8"
 
     def test_read_table_into_spark(self, spark, sqlite_db):
-        df = SqliteSource(sqlite_db).read_table(spark, "users")
+        from dbsurveyor_spark.sources.sqlite_scale import read_table_partitioned
+
+        df = read_table_partitioned(spark, sqlite_db, "users")
         rows = {r.id: r for r in df.collect()}
         assert rows[1].name == "alice" and rows[2].email is None
 
