@@ -21,9 +21,10 @@ engine's native input), `sqlite:///path.db` (sources/sqlite.py),
 `docs:/dir` — a document lake of `<collection>.jsonl` files surveyed via
 distributed variant-based schema inference (sources/documents.py, the
 MongoDB-adapter analog) — or a live server at `postgres://…` or
-`mysql://…` (sources/jdbc_collect.py; needs a JDBC driver jar and a
-reachable server). `test` also validates `jdbc:…` URLs and their
-credentials without connecting.
+`mysql://…`, bare or as `jdbc:postgresql://…` / `jdbc:mysql://…`
+(sources/jdbc_collect.py; needs a JDBC driver jar and a reachable
+server). `test` parses a server URL and its credentials without
+connecting.
 Sampling fills the document's `samples` with reference-shaped TableSample
 entries (models.rs:399) — redacted per security.py's mode BEFORE the rows
 touch the document, matching the reference's redact-by-default posture.
@@ -54,6 +55,18 @@ def _get_spark():
 
 def _is_lake_dir(source: str) -> bool:
     return os.path.isdir(source)
+
+
+def _server_url(source: str) -> str | None:
+    """The URL of a live-server source without its `jdbc:` envelope: any
+    `jdbc:…` URL, or a bare `postgres://`, `postgresql://`, `mysql://` or
+    `mariadb://` one. None for every other source. `test` and `collect`
+    both tell a server source by it."""
+    from .security import JDBC_SCHEMES
+
+    if source.startswith("jdbc:"):
+        return source[len("jdbc:"):]
+    return source if source.split("://", 1)[0] in JDBC_SCHEMES else None
 
 
 def _sqlite_path(url: str) -> str:
@@ -141,26 +154,18 @@ def cmd_collect(args: argparse.Namespace) -> int:
         # --exclude-databases / --include-system-databases)
         from .survey.export import enumerate_lake_databases
 
-        exclude = {
-            e.strip()
-            for chunk in args.exclude_databases
-            for e in chunk.split(",")
-            if e.strip()
-        }
         try:
-            discovered = enumerate_lake_databases(
-                args.source, include_system=True, exclude=()
+            kept = enumerate_lake_databases(
+                args.source,
+                include_system=args.include_system_databases,
+                exclude=[e for chunk in args.exclude_databases for e in chunk.split(",")],
             )
+            databases_filtered = len(
+                enumerate_lake_databases(args.source, include_system=True)
+            ) - len(kept)
         except ValueError as exc:
             print(f"bad server root: {exc}", file=sys.stderr)
             return 2
-        kept = {
-            k: v
-            for k, v in discovered.items()
-            if k not in exclude
-            and (args.include_system_databases or not k.startswith((".", "_")))
-        }
-        databases_filtered = len(discovered) - len(kept)
         if not kept:
             print(
                 f"no surveyable databases under {args.source}", file=sys.stderr
@@ -235,29 +240,26 @@ def cmd_collect(args: argparse.Namespace) -> int:
         doc = src.survey(
             spark, name=args.name, sample=args.sample or 0, redact_mode=args.redact_mode
         )
-    elif args.source.split("://", 1)[0] in (
-        "postgres", "postgresql", "mysql", "mariadb"
-    ):
+    elif (url := _server_url(args.source)) is not None:
         # live relational collect: the pinned catalog sweep through a JDBC
         # reader. Needs a driver jar + reachable server; in driverless
         # environments this fails cleanly at the first catalog query.
-        from .sources.catalog_sql import ENGINES  # noqa: F401
+        from .security import JDBC_SCHEMES
         from .sources.jdbc import JdbcSource
         from .sources.jdbc_collect import collect_jdbc_schema
 
+        engine = JDBC_SCHEMES.get(url.split("://", 1)[0])
+        if engine is None:
+            print(f"unsupported collect source: {args.source}", file=sys.stderr)
+            return 2
         if args.enable_quality:
             print(
                 "warning: --enable-quality applies to lake-dir collect "
                 "only; ignored for jdbc sources",
                 file=sys.stderr,
             )
-        src = JdbcSource(args.source)
-        engine = (
-            "mysql"
-            if args.source.split("://", 1)[0] in ("mysql", "mariadb")
-            else "postgresql"
-        )
         try:
+            src = JdbcSource(url)
             doc = collect_jdbc_schema(
                 lambda sql: src.read_query(spark, sql),
                 engine,
@@ -266,7 +268,7 @@ def cmd_collect(args: argparse.Namespace) -> int:
                 throttle_ms=args.throttle or 0,
                 redact_mode=args.redact_mode,
             )
-        except Exception as exc:  # driver missing / unreachable server
+        except Exception as exc:  # bad URL / driver missing / unreachable server
             print(f"jdbc collect failed: {exc}", file=sys.stderr)
             return 1
     else:
@@ -326,16 +328,16 @@ def cmd_test(args: argparse.Namespace) -> int:
             return 1
         print(f"OK sqlite: {info['name']} ({n_tables} tables)")
         return 0
-    if src.startswith("jdbc:"):
+    url = _server_url(src)
+    if url is not None:
         from .security import parse_connection_string, sanitize_connection_url
 
-        # urlsplit needs the driver scheme, not the jdbc: envelope
         try:
-            parse_connection_string(src[len("jdbc:"):])
+            parse_connection_string(url)
         except ValueError as exc:
             print(f"FAIL jdbc url: {exc}", file=sys.stderr)
             return 1
-        print(f"OK jdbc url parsed: jdbc:{sanitize_connection_url(src[len('jdbc:'):])}")
+        print(f"OK jdbc url parsed: {sanitize_connection_url(url)}")
         return 0
     if src.startswith("docs:"):
         from .sources.documents import DocumentLakeSource

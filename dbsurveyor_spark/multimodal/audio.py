@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
 from ..catalog import load_table
+from ..sources.file_lake import table_fingerprint
 
 AUDIO_WIN = 32  # stub spectral window (bytes)
 AUDIO_STRIDE = 16  # hop size (bytes) — 50% overlap like chromaprint
@@ -108,29 +109,12 @@ _PAIR_CACHE: dict[tuple, DataFrame] = {}
 _PAIR_LOCK = threading.Lock()
 
 
-def _docs_fingerprint(sf_dir: str) -> tuple:
-    import os
-
-    root = os.path.join(sf_dir, "documents.parquet")
-    paths = [root]
-    if os.path.isdir(root):
-        paths = sorted(os.path.join(root, p) for p in os.listdir(root))
-    out = []
-    for p in paths:
-        try:
-            st = os.stat(p)
-            out.append((p, st.st_mtime_ns, st.st_size))
-        except OSError:
-            continue
-    return tuple(out)
-
-
 def aligned_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized dominant-offset aligned pair frame for the lake."""
     key = (
         spark.sparkContext.applicationId,
         sf_dir,
-        _docs_fingerprint(sf_dir),
+        table_fingerprint(sf_dir, "documents"),
     )
     with _PAIR_LOCK:
         hit = _PAIR_CACHE.get(key)

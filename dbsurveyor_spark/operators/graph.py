@@ -22,7 +22,6 @@ intermediate fits comfortably in int64 at any corpus size.
 
 from __future__ import annotations
 
-import os
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,6 +31,7 @@ from pyspark.sql.window import Window
 from ..catalog import load_table
 from ..plans.cache import release_caches, tracked_cache as _tracked_cache
 from ..plans.roundcheck import checkpoint_round
+from ..sources.file_lake import table_fingerprint
 
 PAGERANK_ITERS = 5
 PR_SCALE = 10**12
@@ -56,24 +56,6 @@ TELE_NUM = DAMP_DEN - DAMP_NUM  # (1 - d) numerator = 3
 
 _GRAPH_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
 _GRAPH_LOCK = threading.Lock()
-
-
-def _lineitem_fingerprint(sf_dir: str) -> tuple:
-    """(path, mtime_ns, size) of every lineitem data file — content identity
-    for the memoized graph. Missing paths hash empty (the read raises the
-    real error)."""
-    root = os.path.join(sf_dir, "lineitem.parquet")
-    paths = [root]
-    if os.path.isdir(root):
-        paths = sorted(os.path.join(root, p) for p in os.listdir(root))
-    out = []
-    for p in paths:
-        try:
-            st = os.stat(p)
-            out.append((p, st.st_mtime_ns, st.st_size))
-        except OSError:
-            continue
-    return tuple(out)
 
 
 def copurchase_graph(
@@ -101,7 +83,7 @@ def copurchase_graph(
     key = (
         spark.sparkContext.applicationId,
         sf_dir,
-        _lineitem_fingerprint(sf_dir),
+        table_fingerprint(sf_dir, "lineitem"),
     )
     with _GRAPH_LOCK:
         hit = _GRAPH_CACHE.get(key)

@@ -30,6 +30,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import load_table
 from ..plans.roundcheck import checkpoint_round
+from ..sources.file_lake import table_fingerprint
 from ..functions.vectors import (
     CELL_TOPK_SCHEMA,
     CENTROID_PARTIAL_SCHEMA,
@@ -126,35 +127,13 @@ _CENTROID_CACHE: dict[tuple, list] = {}
 _CENTROID_LOCK = threading.Lock()
 
 
-def _lake_fingerprint(sf_dir: str) -> tuple:
-    """(mtime_ns, size) over the embeddings parquet file(s) — cheap content
-    identity for cache invalidation. Missing paths hash as empty (the
-    subsequent read will raise the real error)."""
-    import os
-
-    root = os.path.join(sf_dir, "embeddings.parquet")
-    paths = [root]
-    if os.path.isdir(root):
-        paths = sorted(
-            os.path.join(root, p) for p in os.listdir(root)
-        )
-    out = []
-    for p in paths:
-        try:
-            st = os.stat(p)
-            out.append((p, st.st_mtime_ns, st.st_size))
-        except OSError:
-            continue
-    return tuple(out)
-
-
 def trained_centroid_rows(spark: SparkSession, sf_dir: str) -> list:
     """The sf_dir's coarse quantizer — [(cell_id, [double]·dim)] sorted by
     cell_id — trained on the base embeddings table, memoized per
     (lake, content fingerprint). Shared by ANN search and embedding dedup:
     an augmented/duplicated corpus row carries an identical vector, so its
     cell assignment equals its original's under the same model."""
-    key = (sf_dir, _lake_fingerprint(sf_dir))
+    key = (sf_dir, table_fingerprint(sf_dir, "embeddings"))
     with _CENTROID_LOCK:
         if key in _CENTROID_CACHE:
             return _CENTROID_CACHE[key]
@@ -573,7 +552,7 @@ def trained_pq_codebooks(spark: SparkSession, sf_dir: str) -> list:
     embeddings table (bounded: production PQ trains on a hash-sample of
     the corpus, exactly like Faiss — the m× pass count applies to the
     sample, not 100 TB)."""
-    key = (sf_dir, _lake_fingerprint(sf_dir))
+    key = (sf_dir, table_fingerprint(sf_dir, "embeddings"))
     with _CENTROID_LOCK:
         if key in _PQ_CACHE:
             return _PQ_CACHE[key]
@@ -1072,7 +1051,7 @@ def trained_residual_codebooks(spark: SparkSession, sf_dir: str) -> list:
     m codebooks fused — no materialized residual table, exactly how a
     production trainer streams x − c(x) on the fly.
     """
-    key = (sf_dir, _lake_fingerprint(sf_dir))
+    key = (sf_dir, table_fingerprint(sf_dir, "embeddings"))
     with _CENTROID_LOCK:
         if key in _RESID_PQ_CACHE:
             return _RESID_PQ_CACHE[key]
@@ -1450,7 +1429,7 @@ def knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (
         spark.sparkContext.applicationId,
         sf_dir,
-        _lake_fingerprint(sf_dir),
+        table_fingerprint(sf_dir, "embeddings"),
     )
     with _KNN_LOCK:
         hit = _KNN_CACHE.get(key)
@@ -2219,7 +2198,7 @@ def trained_residual_sq_bounds(spark: SparkSession, sf_dir: str) -> tuple:
     element_at — no Python in the bounds aggregate) → one map-side
     per-dim min/max aggregate, 2·dim doubles collected.
     """
-    key = (sf_dir, _lake_fingerprint(sf_dir))
+    key = (sf_dir, table_fingerprint(sf_dir, "embeddings"))
     with _CENTROID_LOCK:
         if key in _SQ_RESID_CACHE:
             return _SQ_RESID_CACHE[key]

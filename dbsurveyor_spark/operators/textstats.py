@@ -1120,12 +1120,12 @@ def _bm25_workload_terms(
 def _bm25_store_key(
     sf_dir: str, queries: dict[int, tuple[str, ...]] | None = None
 ) -> tuple:
-    from ..multimodal.audio import _docs_fingerprint
+    from ..sources.file_lake import table_fingerprint
 
     lake = sf_dir.rstrip("/")
     return (
         lake,
-        _docs_fingerprint(lake),
+        table_fingerprint(lake, "documents"),
         _bm25_workload_terms(BM25_QUERIES if queries is None else queries),
     )
 
@@ -1395,12 +1395,12 @@ _QCLS_LOCK = threading.Lock()
 
 
 def _qcls_store_key(sf_dir: str) -> tuple:
-    from ..multimodal.audio import _docs_fingerprint
+    from ..sources.file_lake import table_fingerprint
 
     lake = sf_dir.rstrip("/")
     return (
         lake,
-        _docs_fingerprint(lake),
+        table_fingerprint(lake, "documents"),
         QCLS_BUCKETS,
         QCLS_TRAIN_MOD,
         QCLS_TRAIN_LT,

@@ -190,18 +190,16 @@ def live_keys(lake_dirs: list[str]) -> set[tuple[str, str]]:
     NOTE for new artifact kinds: register the kind's (source table
     fingerprint → key) recipe here, or `gc_unreferenced` will prune it.
     """
-    from ..multimodal.audio import _docs_fingerprint
-    from ..operators.graph import _lineitem_fingerprint
-    from ..operators.similarity import _lake_fingerprint
+    from ..sources.file_lake import table_fingerprint
     from ..operators.textstats import _bm25_store_keys, _qcls_store_key
     from ..survey.sampling import _dsir_store_key
 
     out: set[tuple[str, str]] = set()
     for lake in lake_dirs:
         lake = lake.rstrip("/")
-        emb_key = (lake, _lake_fingerprint(lake))
-        docs_key = (lake, _docs_fingerprint(lake))
-        li_key = (lake, _lineitem_fingerprint(lake))
+        emb_key = (lake, table_fingerprint(lake, "embeddings"))
+        docs_key = (lake, table_fingerprint(lake, "documents"))
+        li_key = (lake, table_fingerprint(lake, "lineitem"))
         for kind in (
             IVF_CENTROIDS,
             PQ_CODEBOOKS,

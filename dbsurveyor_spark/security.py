@@ -8,30 +8,29 @@ Parity targets (behavior only, re-implemented for a Spark pipeline):
   that never exposes the password in repr/str/logs.
 - `dbsurveyor/src/redaction/mod.rs` — sample-row redaction with four
   modes (none / minimal / balanced / conservative) driven by field-name
-  patterns; conservative also keeps timestamp-looking strings.
+  patterns; conservative also keeps whole ISO-8601 dates and date-times.
+  That is a deliberate departure from `redaction/mod.rs:150`, which keeps
+  any string holding a `T`, `-` or `:` and so leaves values such as
+  `MIDDLE EAST`, `555-1234` or `host:5432` in the sample.
 - `dbsurveyor-core/src/security/encryption.rs` — AES-256-GCM with random
   96-bit nonce (the `cryptography` package is not in this container, so
   the cipher core is gated behind an import-try; the envelope format and
   key handling are real and tested against a deterministic stub cipher).
 
-Redaction is exposed both as a plain-Python function (for exported sample
-docs) and as a DataFrame transformation (`redact_dataframe`) so it scales
-to full tables: column selection happens once on the driver, the rewrite
-is a JVM-side `lit()` projection — no Python in the executor path.
+`redact_rows` is the one redaction implementation: every collector's
+sample rows pass through it in `survey.export.table_sample`, after the
+bounded sample reaches the driver.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import secrets
 from dataclasses import dataclass, field
 from typing import Any
 from urllib.parse import parse_qsl, unquote, urlsplit
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 REDACTED_VALUE = "[REDACTED]"
 
@@ -66,6 +65,24 @@ CONSERVATIVE_SAFE_FIELDS = (
 )
 
 REDACTION_MODES = ("none", "minimal", "balanced", "conservative")
+
+# The string values conservative mode keeps: a whole ISO-8601 date, or a
+# date-time with optional seconds, fraction and zone (`1998-08-02`,
+# `2025-01-01T00:00:00Z`, `2025-01-01 12:30:00.5+02:00`).
+_ISO_8601 = re.compile(
+    r"\d{4}-\d{2}-\d{2}([T ]\d{2}:\d{2}(:\d{2}(\.\d+)?)?(Z|[+-]\d{2}(:?\d{2})?)?)?"
+)
+
+# URL scheme of a live server → its JDBC subprotocol, which names its
+# catalog engine too (sources/catalog_sql.ENGINES). SQLite is deliberately
+# absent: its URLs are host-less file paths (jdbc:sqlite:/path) that don't
+# fit the host/port/database shape — sources.sqlite.SqliteSource reads them.
+JDBC_SCHEMES = {
+    "postgres": "postgresql",
+    "postgresql": "postgresql",
+    "mysql": "mysql",
+    "mariadb": "mysql",
+}
 
 
 # --------------------------------------------------------------- credentials
@@ -175,8 +192,6 @@ def compile_sensitive_patterns(
     """(regex, description) pairs; invalid patterns are skipped rather than
     raising (sampling.rs:95 compile_sensitive_patterns — also removes any
     ReDoS risk from malformed user-supplied patterns)."""
-    import re
-
     out = []
     for pattern, description in patterns:
         try:
@@ -227,8 +242,7 @@ def _conservative_safe_key(key: str | None) -> bool:
 
 
 def _looks_like_timestamp(value: str) -> bool:
-    # reference redaction/mod.rs:150 — deliberately loose heuristic.
-    return "T" in value or "-" in value or ":" in value
+    return _ISO_8601.fullmatch(value) is not None
 
 
 def should_redact(key: str | None, value: str, mode: str) -> bool:
@@ -257,51 +271,6 @@ def redact_value(value: Any, key: str | None, mode: str) -> Any:
 
 def redact_rows(rows: list[dict[str, Any]], mode: str) -> list[dict[str, Any]]:
     return [redact_value(r, None, mode) for r in rows]
-
-
-def redact_dataframe(df: DataFrame, mode: str) -> DataFrame:
-    """Column-level redaction as a distributed projection.
-
-    String columns whose NAME matches the mode's patterns are replaced with
-    a literal; in conservative mode, unsafe string columns keep only
-    timestamp-looking values. Non-string columns pass through (the
-    reference only redacts strings). Pure JVM expressions — scales to any
-    table size with zero Python per-row cost.
-    """
-    if mode == "none":
-        return df
-    cols = []
-    for f_ in df.schema.fields:
-        if not isinstance(f_.dataType, T.StringType):
-            cols.append(F.col(f_.name))
-            continue
-        if mode in ("minimal", "balanced"):
-            pats = MINIMAL_PATTERNS + (BALANCED_PATTERNS if mode == "balanced" else ())
-            if _matches(f_.name, pats):
-                cols.append(
-                    F.when(F.col(f_.name).isNull(), None)
-                    .otherwise(F.lit(REDACTED_VALUE))
-                    .alias(f_.name)
-                )
-            else:
-                cols.append(F.col(f_.name))
-        elif mode == "conservative":
-            if _conservative_safe_key(f_.name):
-                cols.append(F.col(f_.name))
-            else:
-                ts_like = (
-                    F.col(f_.name).contains("T")
-                    | F.col(f_.name).contains("-")
-                    | F.col(f_.name).contains(":")
-                )
-                cols.append(
-                    F.when(F.col(f_.name).isNull() | ts_like, F.col(f_.name))
-                    .otherwise(F.lit(REDACTED_VALUE))
-                    .alias(f_.name)
-                )
-        else:
-            raise ValueError(f"unknown redaction mode {mode!r}")
-    return df.select(*cols)
 
 
 # ---------------------------------------------------------------- encryption

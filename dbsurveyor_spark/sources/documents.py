@@ -63,6 +63,8 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .ordering import order_columns
+
 log = logging.getLogger(__name__)
 
 # sampling.rs:22 — field names that signal "order by this, descending" for
@@ -345,14 +347,10 @@ def _sample_order(strategy: Any) -> Column:
     """Sort key of one collection's sample: the detected field's JSON
     encoding descending (ISO-8601 `$date` wrappers and ObjectId hex both
     sort correctly as strings), else the deterministic md5 order."""
-    if strategy == "Unordered":
+    cols = order_columns(strategy)
+    if not cols:
         return F.md5(F.col("raw"))
-    col = (
-        strategy["Timestamp"]["column"]
-        if "Timestamp" in strategy
-        else strategy["PrimaryKey"]["columns"][0]
-    )
-    return F.to_json(F.try_variant_get(F.col("doc"), f"$.{col}", "variant")).desc()
+    return F.to_json(F.try_variant_get(F.col("doc"), f"$.{cols[0]}", "variant")).desc()
 
 
 def _sample_frame(lines: DataFrame, strategies: dict[str, Any], n: int) -> DataFrame:

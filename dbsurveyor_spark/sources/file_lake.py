@@ -88,6 +88,25 @@ def discover_tables(lake_dir: str) -> tuple[dict[str, tuple[str, str]], list[str
     return out, notes
 
 
+def table_fingerprint(sf_dir: str, table: str) -> tuple:
+    """(path, mtime_ns, size) of every data file of ``<table>.parquet`` in
+    ``sf_dir`` (the file, or the part files of its directory): a cheap
+    content identity for artifacts memoized per table. A missing path is
+    left out; the read that follows raises the real error."""
+    root = os.path.join(sf_dir, f"{table}.parquet")
+    paths = [root]
+    if os.path.isdir(root):
+        paths = sorted(os.path.join(root, p) for p in os.listdir(root))
+    out = []
+    for p in paths:
+        try:
+            st = os.stat(p)
+        except OSError:
+            continue
+        out.append((p, st.st_mtime_ns, st.st_size))
+    return tuple(out)
+
+
 def read_lake_table(spark: SparkSession, path: str, fmt: str) -> DataFrame:
     from .files import read_csv, read_json
 

@@ -23,17 +23,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..security import parse_connection_string
-
-# postgres:// etc. → JDBC scheme. SQLite is deliberately absent: its URLs
-# are host-less file paths (jdbc:sqlite:/path) that don't fit the
-# host/port/database shape — use sources.sqlite.SqliteSource instead.
-_JDBC_SCHEMES = {
-    "postgres": "postgresql",
-    "postgresql": "postgresql",
-    "mysql": "mysql",
-    "mariadb": "mysql",
-}
+from ..security import JDBC_SCHEMES, parse_connection_string
 
 
 @dataclass
@@ -45,7 +35,7 @@ class JdbcSource:
 
     def __post_init__(self) -> None:
         info, creds = parse_connection_string(self.url)
-        scheme = _JDBC_SCHEMES.get(info.scheme, info.scheme)
+        scheme = JDBC_SCHEMES.get(info.scheme, info.scheme)
         self._info = info
         self._creds = creds
         port = f":{info.port}" if info.port else ""

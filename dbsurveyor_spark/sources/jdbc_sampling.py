@@ -7,12 +7,18 @@ SampleStatus (models.rs:385-414). Like `jdbc_collect`, everything runs
 through a `read_query` callable so the logic is fully exercised against
 stub frames even though no live server exists in this container.
 
-Beyond the reference, `paged_reader` adds KEYSET pagination for bulk
+Every clause orders by `ordering.order_columns` of the table's
+OrderingStrategy, the one reader of that tagged value.
+
+Beyond the reference, `keyset_pages` adds KEYSET pagination for bulk
 extraction: `WHERE key > last ORDER BY key LIMIT n` touches each row once
 across the whole scan, where OFFSET paging re-reads a growing prefix per
 page (O(pages²) rows server-side — the classic large-table mistake). The
 reference only ever pulls bounded samples so it never needed paging; a
-Spark collector pulling a table for lake-side analysis does.
+Spark collector pulling a table for lake-side analysis does. It is the
+one keyset pager: it takes a page-fetch callable, so `paged_reader` (a
+JDBC `read_query`) and `sqlite_scale.live_keyset_pages` (a read-only
+SQLite connection) run the same loop.
 
 Transient-failure handling: `with_retries` wraps every page/sample query
 in bounded exponential backoff — the connection-handling behavior a live
@@ -22,9 +28,12 @@ deployment hits first (sleep is injectable so tests run instantly).
 from __future__ import annotations
 
 import time
-from typing import Any, Callable
+from collections.abc import Callable, Iterator
+from typing import Any
 
 from pyspark.sql import DataFrame
+
+from .ordering import order_columns
 
 ReadQuery = Callable[[str], DataFrame]
 
@@ -49,18 +58,12 @@ def generate_order_by_clause(
     identical clause shapes, including the Unordered → RANDOM() fallback
     the reference uses for fair samples on orderless tables."""
     direction = "DESC" if descending else "ASC"
-    if isinstance(strategy, dict):
-        if "PrimaryKey" in strategy:
-            cols = strategy["PrimaryKey"]["columns"]
-            parts = ", ".join(
-                f'"{escape_identifier(c)}" {direction}' for c in cols
-            )
-            return f"ORDER BY {parts}"
-        for tag in ("Timestamp", "AutoIncrement", "SystemRowId"):
-            if tag in strategy:
-                col = strategy[tag]["column"]
-                return f'ORDER BY "{escape_identifier(col)}" {direction}'
-    return "ORDER BY RANDOM()"
+    cols = order_columns(strategy)
+    if not cols:
+        return "ORDER BY RANDOM()"
+    return "ORDER BY " + ", ".join(
+        f'"{escape_identifier(c)}" {direction}' for c in cols
+    )
 
 
 TABLESAMPLE_MIN_ROWS = 1000  # sampling.rs:34
@@ -84,9 +87,8 @@ def sample_sql(
     production table. MySQL has no TABLESAMPLE, so it keeps the RANDOM()
     fallback (as does any monotone strategy, which never sorts more than
     an index scan)."""
-    monotone = bool(_strategy_key_columns(strategy))
     if (
-        not monotone
+        not order_columns(strategy)
         and engine == "postgresql"
         and total_rows is not None
         and total_rows >= TABLESAMPLE_MIN_ROWS
@@ -128,16 +130,6 @@ def with_retries(
             sleep(backoff_s * (2 ** (attempt - 1)))
 
 
-def _strategy_key_columns(strategy: dict[str, Any] | str) -> list[str]:
-    if isinstance(strategy, dict):
-        if "PrimaryKey" in strategy:
-            return list(strategy["PrimaryKey"]["columns"])
-        for tag in ("Timestamp", "AutoIncrement", "SystemRowId"):
-            if tag in strategy:
-                return [strategy[tag]["column"]]
-    return []
-
-
 def keyset_columns(
     strategy: dict[str, Any] | str, tiebreaker: str | None = None
 ) -> list[str]:
@@ -150,21 +142,18 @@ def keyset_columns(
     Timestamp is NOT, so it pages only as (ts, tiebreaker) with a
     caller-supplied unique tiebreaker column appended to both the keyset
     and the row-value comparison."""
-    if isinstance(strategy, dict):
-        if "PrimaryKey" in strategy:
-            return list(strategy["PrimaryKey"]["columns"])
-        for tag in ("AutoIncrement", "SystemRowId"):
-            if tag in strategy:
-                return [strategy[tag]["column"]]
-        if "Timestamp" in strategy:
-            if not tiebreaker:
-                raise ValueError(
-                    "keyset paging on a timestamp requires a unique "
-                    "tiebreaker column: timestamps are not unique and a "
-                    "strict resume predicate would skip boundary rows"
-                )
-            return [strategy["Timestamp"]["column"], tiebreaker]
-    raise ValueError("keyset paging requires a monotone ordering")
+    cols = order_columns(strategy)
+    if not cols:
+        raise ValueError("keyset paging requires a monotone ordering")
+    if "Timestamp" in strategy:
+        if not tiebreaker:
+            raise ValueError(
+                "keyset paging on a timestamp requires a unique "
+                "tiebreaker column: timestamps are not unique and a "
+                "strict resume predicate would skip boundary rows"
+            )
+        cols.append(tiebreaker)
+    return cols
 
 
 def keyset_page_sql(
@@ -218,8 +207,8 @@ def _sql_literal(v: Any) -> str:
     return f"'{s}'"
 
 
-def paged_reader(
-    read_query: ReadQuery,
+def keyset_pages(
+    fetch: Callable[[str], list[dict[str, Any]]],
     schema: str | None,
     table: str,
     strategy: dict[str, Any] | str,
@@ -229,8 +218,9 @@ def paged_reader(
     backoff_s: float = DEFAULT_BACKOFF_S,
     sleep: Callable[[float], None] = time.sleep,
     tiebreaker: str | None = None,
-):
-    """Yield lists of Row dicts, one page at a time, resuming by keyset.
+) -> Iterator[list[dict[str, Any]]]:
+    """Yield lists of row dicts, one page at a time, resuming by keyset;
+    ``fetch`` runs one page's SQL and returns its rows.
 
     Each page query runs under `with_retries`; a transient failure
     re-issues the SAME page (keyset position only advances on success, so
@@ -247,10 +237,7 @@ def paged_reader(
             schema, table, strategy, page_size, last, tiebreaker
         )
         rows = with_retries(
-            lambda: [r.asDict() for r in read_query(sql).collect()],
-            retries=retries,
-            backoff_s=backoff_s,
-            sleep=sleep,
+            lambda: fetch(sql), retries=retries, backoff_s=backoff_s, sleep=sleep
         )
         if not rows:
             return
@@ -259,6 +246,24 @@ def paged_reader(
         pages += 1
         if len(rows) < page_size:
             return
+
+
+def paged_reader(
+    read_query: ReadQuery,
+    schema: str | None,
+    table: str,
+    strategy: dict[str, Any] | str,
+    **paging: Any,
+) -> Iterator[list[dict[str, Any]]]:
+    """`keyset_pages` of a JDBC table through ``read_query``; ``paging``
+    takes `keyset_pages`'s keywords."""
+    return keyset_pages(
+        lambda sql: [r.asDict() for r in read_query(sql).collect()],
+        schema,
+        table,
+        strategy,
+        **paging,
+    )
 
 
 def sample_table(
@@ -279,7 +284,7 @@ def sample_table(
     from ..survey.export import table_sample
 
     warnings: list[str] = []
-    if not _strategy_key_columns(strategy):
+    if not order_columns(strategy):
         warnings.append(
             f"table {table} has no reliable ordering; using random sampling"
         )

@@ -1,4 +1,8 @@
-"""Per-table ordering-strategy detection for relational collectors.
+"""OrderingStrategy: its one reader, and its detection for relational
+collectors.
+
+`order_columns` is the only code that unpacks the tagged strategy value;
+every sampler and pager (JDBC, SQLite, the lake, `docs:`) orders by it.
 
 Reference: `dbsurveyor-core/src/models.rs:362` ``OrderingStrategy``
 (AutoIncrement / PrimaryKey / Timestamp / SystemRowId / Unordered). The
@@ -24,6 +28,17 @@ samples on a meaningless axis (ADVICE r5).
 from __future__ import annotations
 
 from typing import Any
+
+
+def order_columns(strategy: dict[str, Any] | str | None) -> list[str]:
+    """The columns a sample or a page of the table orders by: the
+    PrimaryKey columns, the Timestamp / AutoIncrement / SystemRowId column,
+    or ``[]`` for ``Unordered`` (models.rs:362's tagged serde value)."""
+    if not isinstance(strategy, dict):
+        return []
+    ((tag, body),) = strategy.items()
+    return list(body["columns"]) if tag == "PrimaryKey" else [body["column"]]
+
 
 # adapters/helpers.rs:76 TIMESTAMP_COLUMN_NAMES — the relational exact-match
 # list (the document-lake analog keeps its own camelCase list in

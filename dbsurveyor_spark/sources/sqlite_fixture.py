@@ -30,6 +30,8 @@ import os
 import sqlite3
 from typing import Iterable
 
+from .file_lake import table_fingerprint
+
 _FIXTURE_ENV = "DBSURVEYOR_SQLITE_FIXTURE_DIR"
 
 
@@ -45,18 +47,7 @@ def fixture_root() -> str:
 
 
 def _content_fingerprint(sf_dir: str, tables: Iterable[str]) -> str:
-    parts: list[tuple] = []
-    for t in tables:
-        root = os.path.join(sf_dir, f"{t}.parquet")
-        paths = [root]
-        if os.path.isdir(root):
-            paths = sorted(os.path.join(root, p) for p in os.listdir(root))
-        for p in paths:
-            try:
-                st = os.stat(p)
-                parts.append((p, st.st_mtime_ns, st.st_size))
-            except OSError:
-                parts.append((p, -1, -1))
+    parts = [f for t in tables for f in table_fingerprint(sf_dir, t)]
     return hashlib.sha1(repr(parts).encode("utf-8")).hexdigest()[:16]
 
 

@@ -17,12 +17,11 @@ the two distributed shapes its docstring names:
   millions of shard files on shared storage. A DataFrame of shard paths
   is mapped so each executor task opens its own shard locally and streams
   the table out. Adding shards scales linearly with executors.
-- **Live keyset sampling** (`live_keyset_pages`): drives the SAME
-  keyset-page SQL generator + bounded-backoff retry machinery the JDBC
-  contract layer pins (`jdbc_sampling.keyset_page_sql` / `with_retries`)
-  against a real sqlite connection — resume position advances only on
-  success, so a transient failure re-reads the same page and can never
-  skip rows.
+- **Live keyset sampling** (`live_keyset_pages`): the one keyset pager
+  (`jdbc_sampling.keyset_pages`, with its page SQL and bounded-backoff
+  retries) fed by a read-only sqlite connection per page — resume
+  position advances only on success, so a transient failure re-reads the
+  same page and can never skip rows.
 
 Both mapInPandas readers require the .db files to be reachable from
 executors (local mode: trivially; a real cluster: shared storage) — the
@@ -33,20 +32,13 @@ from __future__ import annotations
 
 import contextlib
 import sqlite3
-import time
 from collections.abc import Callable, Iterator
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from .jdbc_sampling import (
-    DEFAULT_BACKOFF_S,
-    DEFAULT_RETRIES,
-    keyset_columns,
-    keyset_page_sql,
-    with_retries,
-)
+from .jdbc_sampling import keyset_pages
 from .sqlite import map_sqlite_type
 
 # unified type (sqlite affinity map) → Spark type, for schema inference
@@ -221,48 +213,25 @@ def live_keyset_pages(
     path: str,
     table: str,
     strategy: dict[str, Any] | str,
-    page_size: int = 10_000,
-    max_pages: int | None = None,
-    retries: int = DEFAULT_RETRIES,
-    backoff_s: float = DEFAULT_BACKOFF_S,
-    sleep: Callable[[float], None] = time.sleep,
-    tiebreaker: str | None = None,
     connect: Callable[[], sqlite3.Connection] | None = None,
+    **paging: Any,
 ) -> Iterator[list[dict[str, Any]]]:
-    """Yield pages of dict rows from a LIVE sqlite table by keyset resume.
-
-    The page SQL comes from the pinned JDBC contract generator
-    (`keyset_page_sql`) and each page runs under `with_retries` — the
-    keyset position advances only on success, so transient failures
-    (injected via ``connect`` in tests, ``SQLITE_BUSY`` in life) re-read
-    the same page and never skip rows. ``connect`` exists for fault
-    injection; the default opens ``path`` read-only per page batch."""
-    cols = keyset_columns(strategy, tiebreaker)
+    """Yield pages of dict rows from a LIVE sqlite table by keyset resume:
+    `jdbc_sampling.keyset_pages` (``paging`` takes its keywords) with one
+    connection per page fetch. A failed fetch (injected via ``connect`` in
+    tests, ``SQLITE_BUSY`` in life) is retried on the same page, so no row
+    is ever skipped. ``connect`` exists for fault injection; the default
+    opens ``path`` read-only."""
     make_con = connect or (
         lambda: sqlite3.connect(_ro_uri(path), uri=True)
     )
-    last: tuple | None = None
-    pages = 0
-    while max_pages is None or pages < max_pages:
-        sql = keyset_page_sql(
-            None, table, strategy, page_size, last, tiebreaker
-        )
 
-        def fetch_page() -> list[dict[str, Any]]:
-            con = make_con()
-            try:
-                con.row_factory = sqlite3.Row
-                return [dict(r) for r in con.execute(sql).fetchall()]
-            finally:
-                con.close()
+    def fetch_page(sql: str) -> list[dict[str, Any]]:
+        con = make_con()
+        try:
+            con.row_factory = sqlite3.Row
+            return [dict(r) for r in con.execute(sql).fetchall()]
+        finally:
+            con.close()
 
-        rows = with_retries(
-            fetch_page, retries=retries, backoff_s=backoff_s, sleep=sleep
-        )
-        if not rows:
-            return
-        yield rows
-        last = tuple(rows[-1][c] for c in cols)
-        pages += 1
-        if len(rows) < page_size:
-            return
+    return keyset_pages(fetch_page, None, table, strategy, **paging)

@@ -192,9 +192,8 @@ def table_sample(
 
     The rows are redacted under ``redact_mode`` (security.py) before they
     enter the document. An ``Unordered`` table is sampled at random; any
-    other ordering, or none known (a lake table's head by its first
-    column), is MostRecent. A complete sample shorter than ``limit`` gets a
-    warning after the source's own ``warnings``.
+    other ordering is MostRecent. A complete sample shorter than ``limit``
+    gets a warning after the source's own ``warnings``.
     """
     warnings = list(warnings or [])
     if status == "Complete" and len(rows) < limit:
@@ -236,10 +235,11 @@ def collect_database_schema(
     aggregate gives every row count (and quality pass 1), one value
     shuffle tests every PK/FK candidate when `infer_keys`, one more
     aggregate counts quality pass 2's outliers, and `sample` > 0 takes the
-    head of each table — about 55 Spark jobs for the catalog's ten tables,
-    however many facts the document records. Key candidates are the
-    catalog's hints, applied to whichever hinted tables and columns the
-    lake holds; other tables get no keys. `schema_document`,
+    head of each table in the order of its recorded OrderingStrategy —
+    about 55 Spark jobs for the catalog's ten tables, however many facts
+    the document records. Key candidates are the catalog's hints, applied
+    to whichever hinted tables and columns the lake holds; other tables
+    get no keys. `schema_document`,
     `table_entry` and `table_sample` shape the result: an inferred key
     also gets its index and constraint entries, and the samples are
     redacted under `redact_mode` with the table's row count as
@@ -280,12 +280,20 @@ def collect_database_schema(
                 scan.foreign_keys.get(tname, []),
                 row_count=scan.row_counts[tname],
                 comment=f"format={scan.sources[tname][1]}",
+                ordering_strategy=scan.orderings[tname],
             )
         )
     samples = None
     if scan.samples is not None:
         samples = [
-            table_sample(t, rows, sample, redact_mode, total_rows=scan.row_counts[t])
+            table_sample(
+                t,
+                rows,
+                sample,
+                redact_mode,
+                total_rows=scan.row_counts[t],
+                ordering_strategy=scan.orderings[t],
+            )
             for t, rows in scan.samples.items()
         ]
     return schema_document(
@@ -341,7 +349,6 @@ def enumerate_lake_databases(
 def collect_multi_database_schema(
     spark: SparkSession,
     datasets: dict[str, str],
-    continue_on_error: bool = True,
     infer_keys: bool = True,
     throttle_ms: int | None = None,
     databases_filtered: int = 0,
@@ -357,8 +364,8 @@ def collect_multi_database_schema(
 
     ``datasets`` maps database-name → dataset directory; each database is
     collected by `collect_database_schema` with ``sample``,
-    ``redact_mode`` and ``quality``. Failures are recorded (not raised)
-    when ``continue_on_error``, matching the reference's config default.
+    ``redact_mode`` and ``quality``. A database that fails is recorded in
+    ``failures``, not raised (the reference's default continue-on-error).
     """
     started = datetime.now(timezone.utc)
     t0 = time.monotonic()
@@ -390,8 +397,6 @@ def collect_multi_database_schema(
                 }
             )
         except Exception as exc:
-            if not continue_on_error:
-                raise
             failures.append(
                 {
                     "database_name": db_name,

@@ -22,14 +22,18 @@ whole survey:
    FK candidate of the catalog's hints whose tables and columns are
    present (`profile.key_inference`), collected as one frame;
 4. pass 2 — one action: the outlier counts of every table, packed likewise;
-5. samples — the `orderBy(desc(first column)).limit(n)` head of each
-   frame, from the same pool (`export.table_sample` redacts them before
-   they enter the document).
+5. samples — each table's OrderingStrategy comes from its schema and its
+   inferred primary key by the rule the SQLite and JDBC collectors use
+   (`sources/ordering.relational_ordering_strategy`), and its sample is
+   the `orderBy(...).limit(n)` head by that strategy's columns,
+   descending, or by a deterministic row hash for an `Unordered` table;
+   one job per table, from the driver pool (`export.table_sample` redacts
+   the rows before they enter the document).
 
-Steps 2 and 4, step 3 and step 5 do not depend on each other and run side
-by side. The ten-table catalog lake takes about 55 Spark jobs in all (AQE
-runs each shuffle stage of an action as a job of its own), where reading
-each table once per phase took 204.
+Steps 2 and 4 run side by side with steps 3 and 5; the samples wait for
+the keys they are ordered by. The ten-table catalog lake takes about 55
+Spark jobs in all (AQE runs each shuffle stage of an action as a job of
+its own), where reading each table once per phase took 204.
 
 Jobs submitted from pool threads keep the caller's Spark job group
 (`profile.pool_map`), so the Spark UI and the status store tie them to the
@@ -52,6 +56,7 @@ from pyspark.sql.types import IntegralType
 
 from ..catalog import TABLES, load_table
 from ..sources.file_lake import discover_tables, read_lake_table
+from ..sources.ordering import order_columns, relational_ordering_strategy
 from .profile import FK_CANDIDATES, PK_CANDIDATES, key_inference, pool_map
 from .quality import (
     _quality_pass1,
@@ -90,20 +95,20 @@ def collect_packed(parts: dict[Any, DataFrame]) -> dict[Any, list[dict]]:
 def sample_tables(
     spark: SparkSession,
     frames: dict[str, DataFrame],
+    orderings: dict[str, Any],
     limit: int,
     throttle_ms: int | None = None,
 ) -> dict[str, list[dict]]:
     """Table → its deterministic head: up to ``limit`` rows ordered by the
-    first column, descending."""
+    columns of the table's OrderingStrategy in ``orderings``, descending,
+    or for ``Unordered`` by a hash of the whole row."""
 
     def head(tname: str) -> list[dict]:
         df = frames[tname]
         if not df.columns:  # an empty csv/jsonl file has no column to order by
             return []
-        return [
-            r.asDict(recursive=True)
-            for r in df.orderBy(F.desc(df.columns[0])).limit(limit).collect()
-        ]
+        order = [F.desc(c) for c in order_columns(orderings[tname])] or [F.xxhash64(*df.columns)]
+        return [r.asDict(recursive=True) for r in df.orderBy(*order).limit(limit).collect()]
 
     return dict(zip(frames, pool_map(spark, head, list(frames), throttle_ms)))
 
@@ -111,8 +116,6 @@ def sample_tables(
 def _row_counts_and_quality(
     frames: dict[str, DataFrame],
     quality: QualityConfig | None,
-    rsd: float,
-    z_threshold: float | None,
 ) -> tuple[dict[str, int], list[dict] | None]:
     """Pass 1 for every table in one action (just the row count unless
     quality analysis runs), then pass 2's outlier counts for every table in
@@ -124,7 +127,7 @@ def _row_counts_and_quality(
         for t, rows in collect_packed(
             {
                 t: (
-                    _quality_pass1(df, num_cols[t], rsd)
+                    _quality_pass1(df, num_cols[t])
                     if analyze
                     else df.agg(F.count(F.lit(1)).alias("__total"))
                 )
@@ -138,12 +141,10 @@ def _row_counts_and_quality(
     if not analyze:
         return row_counts, [disabled_table_metrics(t, n) for t, n in row_counts.items()]
 
-    if z_threshold is None:
-        z_threshold = quality.z_score_threshold
     checks = {t: outlier_checks(r, num_cols[t], quality) for t, r in pass1.items()}
     pass2 = collect_packed(
         {
-            t: _quality_pass2(df, checks[t], z_threshold)
+            t: _quality_pass2(df, checks[t], quality.z_score_threshold)
             for t, df in frames.items()
             if checks[t]
         }
@@ -156,8 +157,6 @@ def _row_counts_and_quality(
             checks[t],
             pass2[t][0] if t in pass2 else {},
             quality,
-            rsd,
-            z_threshold,
         )
         for t, df in frames.items()
     ]
@@ -228,6 +227,7 @@ class LakeSurvey:
     row_counts: dict[str, int]
     primary_keys: dict[str, list[str]]
     foreign_keys: dict[str, list[dict[str, Any]]]
+    orderings: dict[str, Any]  # table → OrderingStrategy (models.rs:362)
     samples: dict[str, list[dict]] | None  # table → sampled rows, unredacted
     quality_metrics: list[dict] | None
     warnings: list[str]
@@ -241,8 +241,6 @@ def survey_lake(
     infer_keys: bool = True,
     sample: int = 0,
     quality: QualityConfig | None = None,
-    rsd: float = 0.02,
-    z_threshold: float | None = None,
     throttle_ms: int | None = None,
 ) -> LakeSurvey:
     """Survey the tables of the lake at ``lake_dir`` with one read of each.
@@ -252,13 +250,14 @@ def survey_lake(
     ValueError before any Spark work). A table that fails to load is left
     out and named in ``warnings``, as are the entries `discover_tables`
     skips or renames. ``infer_keys`` runs the catalog's PK/FK
-    candidates whose tables and columns are in the scan; ``sample`` > 0
-    takes that many rows per table, unredacted; ``quality`` adds the
+    candidates whose tables and columns are in the scan. Each table's
+    OrderingStrategy follows from its schema and primary key
+    (`relational_ordering_strategy`); ``sample`` > 0 takes that many rows
+    per table in that order, unredacted; ``quality`` adds the
     TableQualityMetrics list.
 
-    After the loads, the passes, the key shuffle and the samples do not
-    depend on each other, so they are planned and run side by side from
-    the driver pool.
+    After the loads, the passes run side by side with the key shuffle and
+    the samples, which follow the keys, from the driver pool.
     """
     found, notes = discover_tables(lake_dir)
     if tables is None:
@@ -285,21 +284,33 @@ def survey_lake(
         for t, exc in loaded.items()
         if isinstance(exc, Exception)
     ]
-    tasks = [lambda: _row_counts_and_quality(frames, quality, rsd, z_threshold)]
-    if infer_keys:
-        tasks.append(lambda: _infer_keys(frames))
-    if sample:
-        tasks.append(lambda: sample_tables(spark, frames, sample, throttle_ms))
-    results = pool_map(spark, lambda task: task(), tasks, throttle_ms)
-    row_counts, metrics = results.pop(0)
-    primary_keys, foreign_keys = results.pop(0) if infer_keys else ({}, {})
+
+    def keys_and_samples():
+        primary_keys, foreign_keys = _infer_keys(frames) if infer_keys else ({}, {})
+        orderings = {
+            t: relational_ordering_strategy(
+                [{"name": f.name, "data_type": f.dataType.simpleString()} for f in df.schema.fields],
+                primary_keys.get(t, []),
+            )
+            for t, df in frames.items()
+        }
+        samples = sample_tables(spark, frames, orderings, sample, throttle_ms) if sample else None
+        return primary_keys, foreign_keys, orderings, samples
+
+    (row_counts, metrics), (primary_keys, foreign_keys, orderings, samples) = pool_map(
+        spark,
+        lambda task: task(),
+        [lambda: _row_counts_and_quality(frames, quality), keys_and_samples],
+        throttle_ms,
+    )
     return LakeSurvey(
         sources=sources,
         frames=frames,
         row_counts=row_counts,
         primary_keys=primary_keys,
         foreign_keys=foreign_keys,
-        samples=results.pop(0) if sample else None,
+        orderings=orderings,
+        samples=samples,
         quality_metrics=metrics,
         warnings=warnings,
     )

@@ -725,7 +725,13 @@ FROM (SELECT {dirty} AS k FROM {ct} WHERE {cc} IS NOT NULL) c""")
 # ------------------------------------------------ document-level collection
 
 
-def _quality_pass1(df: DataFrame, num_cols: list[str], rsd: float) -> DataFrame:
+# relative standard deviation of pass 1's distinct-count sketches
+QUALITY_RSD = 0.02
+
+
+def _quality_pass1(
+    df: DataFrame, num_cols: list[str], rsd: float = QUALITY_RSD
+) -> DataFrame:
     """Pass 1 of :func:`collect_quality_metrics` as one 1-row aggregate:
     ``__total``, ``__row_distinct``, per column ``{c}__nonnull`` and
     ``{c}__distinct``, per numeric column ``{c}__mean`` and ``{c}__std``."""
@@ -835,8 +841,6 @@ def table_metrics(
     checks: list[tuple[str, float, float]],
     outlier_counts: dict,
     config: QualityConfig,
-    rsd: float,
-    z_threshold: float,
 ) -> dict:
     """One TableQualityMetrics dict from pass 1's row ``r`` and pass 2's
     ``outlier_counts`` (column → count, for the columns in ``checks``)."""
@@ -860,7 +864,7 @@ def table_metrics(
             )
         uniq = min(r[f"{c}__distinct"], nonnull)
         # HLL reads within 3·rsd of exact-unique are noise, not dups
-        if nonnull - uniq < 3 * rsd * nonnull:
+        if nonnull - uniq < 3 * QUALITY_RSD * nonnull:
             uniq = nonnull
         # uniqueness.rs:33-44 stringifies NULL as a value
         # ("null:__NULL__"), so repeated nulls are duplicates and the
@@ -888,7 +892,7 @@ def table_metrics(
                 {
                     "column_name": c,
                     "outlier_count": n_out,
-                    "z_score_threshold": z_threshold,
+                    "z_score_threshold": config.z_score_threshold,
                     "mean": m,
                     "std_dev": sd,
                 }
@@ -896,7 +900,7 @@ def table_metrics(
 
     comp = sum(comp_scores) / len(comp_scores) if comp_scores else 1.0
     row_distinct = min(r["__row_distinct"], total)
-    if total - row_distinct < 3 * rsd * total:  # HLL noise floor
+    if total - row_distinct < 3 * QUALITY_RSD * total:  # HLL noise floor
         row_distinct = total
     row_uniq = (row_distinct / total) if total else 1.0
     consistency = 1.0  # parquet columns are strongly typed
@@ -950,8 +954,6 @@ def collect_quality_metrics(
     tables: list[str] | None = None,
     *,
     config: QualityConfig | None = None,
-    rsd: float = 0.02,
-    z_threshold: float | None = None,
 ) -> list[dict]:
     """TableQualityMetrics-shaped dicts for the schema document
     (quality/models.rs:273 TableQualityMetrics; analyzer.rs:104 weighted
@@ -960,8 +962,7 @@ def collect_quality_metrics(
 
     ``config`` carries sensitivity, minimum thresholds, and score weights
     (defaults = the reference's: Medium/2.5σ, mins 0.95/0.98/0.90, equal
-    weights). An explicit ``z_threshold`` overrides the sensitivity-derived
-    one (back-compat knob).
+    weights).
 
     Runs the quality half of the lake scan (`lakescan.survey_lake`): two
     Expand-free aggregate jobs for ALL tables together, each a union of
@@ -990,8 +991,6 @@ def collect_quality_metrics(
         tables,
         infer_keys=False,
         quality=config,
-        rsd=rsd,
-        z_threshold=z_threshold,
     )
     return scan.quality_metrics
 

@@ -252,10 +252,10 @@ _DSIR_LOCK = threading.Lock()
 
 
 def _dsir_store_key(sf_dir: str) -> tuple:
-    from ..multimodal.audio import _docs_fingerprint
+    from ..sources.file_lake import table_fingerprint
 
     lake = sf_dir.rstrip("/")
-    return (lake, _docs_fingerprint(lake), DSIR_BUCKETS)
+    return (lake, table_fingerprint(lake, "documents"), DSIR_BUCKETS)
 
 
 def _dsir_features(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -100,9 +100,9 @@ class TestCollect:
         for doc in docs:
             assert [s["sample_size"] for s in doc["samples"]] == [2, 2]
             # the redact mode reaches every database: balanced would keep
-            # EUROPE, conservative redacts it (it does not look like a time)
+            # both names, conservative redacts them (neither is a date)
             assert [r["r_name"] for r in doc["samples"][0]["rows"]] == [
-                "MIDDLE EAST",
+                "[REDACTED]",
                 "[REDACTED]",
             ]
             assert [m["table_name"] for m in doc["quality_metrics"]] == ["region", "nation"]
@@ -191,6 +191,14 @@ class TestSources:
         outerr = capsys.readouterr().out
         assert "OK lake: 10 tables" in outerr
         assert "p%40s" not in outerr  # credentials never echo
+
+    def test_bare_server_url_probe(self, capsys):
+        """`test` takes the bare server URL `collect` takes, not only the
+        `jdbc:` form `list-types` advertises."""
+        assert run(["test", "postgres://u:p@h:5432/d"]) == 0
+        out = capsys.readouterr().out
+        assert "OK jdbc url parsed: postgres://h:5432/d" in out
+        assert "u:p" not in out
 
     def test_text_lake_probe(self, tmp_path, capsys):
         lake = tmp_path / "lake"
@@ -340,6 +348,25 @@ class TestJdbcCollectVerb:
         err = capsys.readouterr().err
         assert "jdbc collect failed" in err
         # credentials never leak into the failure output
+        assert "u:p" not in err.replace("jdbc collect failed", "")
+
+    def test_jdbc_url_reaches_the_jdbc_collect(self, tmp_path, capsys):
+        """`collect` takes the `jdbc:postgresql://…` form `list-types`
+        advertises and `test` accepts: the catalog sweep runs and fails
+        cleanly for want of a driver jar."""
+        from dbsurveyor_spark.cli import main
+
+        rc = main(
+            [
+                "collect",
+                "jdbc:postgresql://u:p@localhost:5432/app",
+                "--output",
+                str(tmp_path / "out.json"),
+            ]
+        )
+        assert rc == 1
+        err = capsys.readouterr().err
+        assert "jdbc collect failed" in err
         assert "u:p" not in err.replace("jdbc collect failed", "")
 
 

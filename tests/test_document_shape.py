@@ -17,6 +17,7 @@ import pytest
 
 from dbsurveyor_spark import cli
 from dbsurveyor_spark.sources.jdbc_collect import collect_jdbc_schema
+from dbsurveyor_spark.sources.ordering import order_columns
 from dbsurveyor_spark.survey.export import validate_schema_doc
 
 from .test_jdbc_collect import _stub_reader
@@ -86,17 +87,37 @@ def _docs(spark, tmp_path):
 def _jdbc(spark, tmp_path):
     base = _stub_reader(spark)
 
-    def reader(sql):
+    def reader(sql):  # a server answering each sample query in its ORDER BY
+        if sql.startswith('SELECT * FROM "public"."orders"'):
+            return spark.createDataFrame([(11, 2), (10, 1)], "order_id long, user_id long")
         if sql.startswith("SELECT * FROM"):
-            return spark.createDataFrame([(1, "a@x.com")], "id long, email string")
+            return spark.createDataFrame([(2, "b@x.com"), (1, "a@x.com")], "id long, email string")
         return base(sql)
 
     return collect_jdbc_schema(reader, "postgresql", sample_size=2)
 
 
-@pytest.mark.parametrize("collect", [_lake, _sqlite, _docs, _jdbc], ids=lambda f: f.__name__[1:])
-def test_every_collector_emits_one_shape(spark, tmp_path, collect):
-    doc = collect(spark, tmp_path)
+COLLECTORS = pytest.mark.parametrize(
+    "collect", [_lake, _sqlite, _docs, _jdbc], ids=lambda f: f.__name__[1:]
+)
+
+
+@pytest.fixture(scope="module")
+def collected(spark, tmp_path_factory):
+    """Each collector's document, collected once for the module."""
+    docs = {}
+
+    def get(collect):
+        if collect not in docs:
+            docs[collect] = collect(spark, tmp_path_factory.mktemp(collect.__name__[1:]))
+        return docs[collect]
+
+    return get
+
+
+@COLLECTORS
+def test_every_collector_emits_one_shape(collected, collect):
+    doc = collected(collect)
     assert validate_schema_doc(doc) == []
     assert set(doc) == ENVELOPE
     assert set(doc["database_info"]) == DATABASE_INFO
@@ -112,3 +133,23 @@ def test_every_collector_emits_one_shape(spark, tmp_path, collect):
         assert all(isinstance(r, dict) for r in s["rows"])
         # every collector redacts under the default balanced mode
         assert all(r.get("email") in (None, "[REDACTED]") for r in s["rows"])
+
+
+@COLLECTORS
+def test_every_sample_follows_its_tables_ordering(collected, collect):
+    """Each table records an OrderingStrategy, and its sample says the same
+    strategy and is in that order: by `order_columns`, descending, or, for
+    `Unordered`, a Random sample."""
+    doc = collected(collect)
+    ordering = {t["name"]: t["ordering_strategy"] for t in doc["tables"]}
+    assert None not in ordering.values()
+    for s in doc["samples"] or []:
+        strategy = s["ordering_strategy"]
+        assert strategy == ordering[s["table_name"]], s["table_name"]
+        cols = order_columns(strategy)
+        if cols:
+            keys = [tuple(r[c] for c in cols) for r in s["rows"]]
+            assert keys == sorted(keys, reverse=True), s["table_name"]
+            assert set(s["sampling_strategy"]) == {"MostRecent"}
+        else:
+            assert set(s["sampling_strategy"]) == {"Random"}, s["table_name"]

@@ -48,7 +48,9 @@ def test_cli_text_lake_samples_and_quality(spark, tmp_path):
     assert main(["sql", out, "-o", out + ".sql"]) == 0
     doc = json.loads(open(out).read())
     samples = {s["table_name"]: s["rows"] for s in doc["samples"]}
-    assert [r["a"] for r in samples["t"]] == [3, 2, 1]  # head by first column, descending
+    # no key and no insertion-time column: Unordered, sampled by row hash
+    assert sorted(r["a"] for r in samples["t"]) == [1, 2, 3]
+    assert {s["sampling_strategy"]["Random"]["limit"] for s in doc["samples"]} == {5}
     assert len(samples["u"]) == 2
     quality = {m["table_name"]: m for m in doc["quality_metrics"]}
     assert quality["t"]["analyzed_rows"] == 3

@@ -25,6 +25,7 @@ import pytest
 
 from dbsurveyor_spark import cli, registry
 from dbsurveyor_spark.catalog import TABLES, table_path
+from dbsurveyor_spark.sources.ordering import order_columns
 from dbsurveyor_spark.survey import profile
 from dbsurveyor_spark.survey.export import collect_database_schema
 from dbsurveyor_spark.survey.lakescan import survey_lake
@@ -141,19 +142,26 @@ class TestDocumentAgainstDuckDB:
 
     def test_samples_are_descending_heads(self, surveyed):
         _, doc, con = surveyed
-        cols = {t["name"]: t["columns"][0]["name"] for t in doc["tables"]}
+        tables = {t["name"]: t for t in doc["tables"]}
+        # every catalog table but lineitem has its first column as its key
+        assert {t for t, d in tables.items() if d["ordering_strategy"] == "Unordered"} == {
+            "lineitem"
+        }
         assert [s["table_name"] for s in doc["samples"]] == list(TABLES)
         for s in doc["samples"]:
-            t, first = s["table_name"], cols[s["table_name"]]
+            t = s["table_name"]
             (n,) = con.execute(f"SELECT count(*) FROM {t}").fetchone()
             assert s["sample_size"] == len(s["rows"]) == min(SAMPLE, n)
-            want = [
-                r[0]
-                for r in con.execute(
-                    f"SELECT {first} FROM {t} ORDER BY {first} DESC LIMIT {SAMPLE}"
-                ).fetchall()
-            ]
-            assert [r[first] for r in s["rows"]] == want, t
+            assert s["ordering_strategy"] == tables[t]["ordering_strategy"], t
+            cols = order_columns(s["ordering_strategy"])
+            if not cols:
+                assert s["sampling_strategy"] == {"Random": {"limit": SAMPLE}}
+                continue
+            want = con.execute(
+                f"SELECT {', '.join(cols)} FROM {t} "
+                f"ORDER BY {', '.join(c + ' DESC' for c in cols)} LIMIT {SAMPLE}"
+            ).fetchall()
+            assert [tuple(r[c] for c in cols) for r in s["rows"]] == want, t
 
 
 # ------------------------------------------------------------------ edge cases
@@ -277,6 +285,33 @@ def test_partial_catalog_lake_collects(spark, tmp_path, capsys):
     assert tables["orders"]["primary_key"]["columns"] == [c for t, c in pk if t == "orders"]
     assert tables["widgets"]["primary_key"] is None
     assert all(t["foreign_keys"] == [] for t in tables.values())
+
+
+def test_sample_follows_a_timestamp_ordering(spark, tmp_path):
+    """A table with no key but a `created_at` column records the Timestamp
+    strategy, and its sample is the newest rows by `created_at`, not by
+    its first column."""
+    import datetime as dt
+
+    lake = tmp_path / "lake"
+    lake.mkdir()
+    day = dt.datetime(2024, 1, 1)
+    pq.write_table(
+        pa.table(
+            {
+                "note": ["d", "c", "b", "a", "e"],
+                "created_at": [day + dt.timedelta(days=d) for d in (3, 0, 4, 1, 2)],
+            }
+        ),
+        lake / "audit.parquet",
+    )
+    doc = collect_database_schema(spark, str(lake), sample=3, redact_mode="none")
+    strategy = {"Timestamp": {"column": "created_at", "direction": "Descending"}}
+    assert doc["tables"][0]["ordering_strategy"] == strategy
+    (s,) = doc["samples"]
+    assert s["ordering_strategy"] == strategy
+    assert s["sampling_strategy"] == {"MostRecent": {"limit": 3}}
+    assert [r["note"] for r in s["rows"]] == ["b", "d", "e"]
 
 
 def test_key_candidate_column_must_exist(spark, tmp_path):

@@ -88,9 +88,15 @@ class TestRedaction:
         assert out["id"] == 42
         assert out["created_at"] == "2025-01-01T00:00:00Z"  # _at suffix safe
         assert out["username"] == sec.REDACTED_VALUE
-        # ssn contains '-' → looks_like_timestamp heuristic keeps it
-        # (reference redaction/mod.rs:150 behavior, deliberately mirrored)
-        assert out["ssn"] == "123-45-6789"
+        # only a whole ISO-8601 date or date-time is kept, so the '-' in an
+        # ssn no longer passes it (a departure from redaction/mod.rs:150)
+        assert out["ssn"] == sec.REDACTED_VALUE
+
+    def test_conservative_keeps_only_iso_dates_and_times(self):
+        leaky = ["MIDDLE EAST", "555-1234", "host:5432", "123-45-6789"]
+        kept = ["2025-01-01T00:00:00Z", "1998-08-02"]
+        out = sec.redact_rows([{"note": v} for v in leaky + kept], "conservative")
+        assert [r["note"] for r in out] == [sec.REDACTED_VALUE] * len(leaky) + kept
 
     def test_nested_values(self):
         nested = {"profile": {"api_key": "k-123", "bio": "text"}, "tags": ["a"]}
@@ -102,35 +108,6 @@ class TestRedaction:
     def test_unknown_mode_raises(self):
         with pytest.raises(ValueError):
             sec.redact_rows([ROW], "paranoid")
-
-
-class TestRedactDataframe:
-    def test_minimal_redacts_matching_string_columns(self, spark):
-        df = spark.createDataFrame(
-            [(1, "alice", "hunter2", None)],
-            "id bigint, username string, password string, token string",
-        )
-        out = sec.redact_dataframe(df, "minimal").collect()[0]
-        assert out.password == sec.REDACTED_VALUE
-        assert out.username == "alice"
-        assert out.token is None  # nulls stay null
-        assert out.id == 1
-
-    def test_conservative_timestamp_heuristic(self, spark):
-        df = spark.createDataFrame(
-            [(1, "2025-01-01T00:00:00", "plain words")],
-            "order_id bigint, note string, comment string",
-        )
-        out = sec.redact_dataframe(df, "conservative").collect()[0]
-        assert out.note == "2025-01-01T00:00:00"  # timestamp-looking kept
-        assert out.comment == sec.REDACTED_VALUE
-        assert out.order_id == 1  # _id safe + non-string
-
-    def test_stays_jvm_side(self, spark):
-        from dbsurveyor_spark.plans.asserts import assert_no_python_eval
-
-        df = spark.createDataFrame([(1, "x")], "id bigint, password string")
-        assert_no_python_eval(sec.redact_dataframe(df, "balanced"))
 
 
 class TestEncryption:

@@ -229,6 +229,26 @@ def test_fixture_is_content_addressed_and_reused(lake_db):
     assert again == lake_db  # same content fingerprint → same artifact
 
 
+def test_fixture_fingerprint_follows_the_source_files(tmp_path):
+    """The fixture key changes when a source file appears, changes or
+    disappears, so a rewritten lake never reads a stale fixture."""
+    from dbsurveyor_spark.sources.sqlite_fixture import _content_fingerprint
+
+    src = tmp_path / "t.parquet"
+
+    def fp():
+        return _content_fingerprint(str(tmp_path), ("t",))
+
+    absent = fp()
+    src.write_bytes(b"v1")
+    first = fp()
+    src.write_bytes(b"v2 longer")
+    changed = fp()
+    src.unlink()
+    assert len({absent, first, changed}) == 3
+    assert fp() == absent
+
+
 def test_schema_survey_fields(spark):
     from dbsurveyor_spark.operators.dbsource import (
         SCHEMA_TABLES,
